@@ -69,6 +69,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from datetime import datetime
 from hashlib import blake2b
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -152,16 +153,11 @@ def _as_nullable(dt: T.DataType) -> T.DataType:
     return dt
 
 
-def _seq_bound(col):
-    """Canonical zone-map bound for a timestamp column: fixed-width session-TZ
-    (UTC) format with microseconds, so lexicographic compare == temporal
-    compare and JSON round-trips losslessly."""
-    return F.date_format(col, "yyyy-MM-dd HH:mm:ss.SSSSSS")
-
-
 def _seq_bound_py(v) -> str | None:
-    """The driver-side twin of ``_seq_bound`` for datetimes read from parquet
-    footers / user arguments (naive datetimes are already session-TZ/UTC)."""
+    """Canonical zone-map bound for a timestamp read from parquet footers /
+    user arguments: fixed-width session-TZ (UTC) format with microseconds,
+    so lexicographic compare == temporal compare and JSON round-trips
+    losslessly (naive datetimes are already session-TZ/UTC)."""
     if v is None:
         return None
     if isinstance(v, str):
@@ -194,6 +190,31 @@ def _key_bounds_py(lo, hi):
         if c <= 0x10FFFF:
             return lo_b, p[:i] + chr(c)
     return lo_b, None  # un-incrementable prefix: keep only the lower bound
+
+
+def _blind_stat_paths(schema: T.StructType, keep) -> list[str]:
+    """Parquet column paths of every string/binary leaf outside ``keep``
+    (top-level names), nested leaves included — struct fields as ``a.b``,
+    array elements as ``a.list.element``, map entries as
+    ``a.key_value.key``/``.value`` (Spark's standard Parquet layout).
+    These are the columns written without min/max footer statistics."""
+
+    def leaves(dt: T.DataType, path: str):
+        if isinstance(dt, (T.StringType, T.BinaryType)):
+            yield path
+        elif isinstance(dt, T.StructType):
+            for f in dt.fields:
+                yield from leaves(f.dataType, f"{path}.{f.name}")
+        elif isinstance(dt, T.ArrayType):
+            yield from leaves(dt.elementType, f"{path}.list.element")
+        elif isinstance(dt, T.MapType):
+            yield from leaves(dt.keyType, f"{path}.key_value.key")
+            yield from leaves(dt.valueType, f"{path}.key_value.value")
+
+    return [
+        p for f in schema.fields if f.name not in keep
+        for p in leaves(f.dataType, f.name)
+    ]
 
 
 #: above this many keys the capped filter degrades below ~10 bits/key and
@@ -731,7 +752,9 @@ class LakeTable:
         events regardless of arrival order, and seq-bump batches carry the
         same guarantee through the bump-resolution read path. Reorg commits
         (compact/vacuum) carry no logical change and are skipped; explicit
-        schema-update commits re-apply; fold-into-base commits on the
+        schema-update commits re-apply under the batch id
+        ``rebase:<branch>:<version>:<batch_id>`` (so a same-named update
+        already on this head cannot mask them); fold-into-base commits on the
         branch (CoW merge / overwrite / rollback / backfill) cannot be
         replayed row-wise and refuse loud. Rebase publish is batch-atomic,
         not all-or-nothing: a crash mid-way leaves a prefix published —
@@ -774,9 +797,14 @@ class LakeTable:
             if op in ("compact", "vacuum", "rebucket"):
                 continue  # physical reorganizations: no logical change
             if op == "schema-update":
+                # namespaced id: schema updates commonly share the default
+                # id, which this head's ledger may already hold from its own
+                # post-fork update — reusing it would skip the replay
                 sch = self.schema_from_snap(s)
                 if sch is not None and batches:
-                    self.update_schema(sch, batch_id=batches[0])
+                    self.update_schema(
+                        sch, batch_id=f"rebase:{name}:{sv}:{batches[0]}"
+                    )
                 continue
             if op != "merge":
                 raise ConcurrentCommitError(
@@ -1493,12 +1521,12 @@ class LakeTable:
         commit_dir = self._new_commit_dir(base_version)
         # already hash-partitioned by _bucket from the dedup shuffle — write
         # directly (no second exchange); each task writes only its buckets.
-        to_write.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(commit_dir)
+        self._write_files(to_write, commit_dir)
         new_files = self._list_written(commit_dir, snap, table_schema, stats, kind="delta")
         if not new_files:  # empty batch: ledger-only commit, no orphan dir
             shutil.rmtree(commit_dir, ignore_errors=True)
             return self._commit(snap, base_version, {}, stats, table_schema, append=False, operation="merge")
-        self._delta_stats_from_footers(new_files, stats)
+        self._stats_from_footers(new_files, stats, kind="delta")
         out = self._commit(snap, base_version, new_files, stats, table_schema, append=True, operation="merge")
 
         # compaction policy: any bucket with too many delta files gets
@@ -1532,13 +1560,22 @@ class LakeTable:
                 pass
         return stats
 
-    def _delta_stats_from_footers(self, new_files: dict[str, list[dict]], stats: MergeStats) -> None:
-        """Fill per-bucket/batch stats from the just-written delta files —
-        driver-side parquet metadata only, never a Spark job.
+    def _stats_from_footers(
+        self, new_files: dict[str, list[dict]], stats: MergeStats, kind: str
+    ) -> None:
+        """Account the files a commit just wrote — driver-side parquet
+        metadata only, never a Spark job. Every write path uses it (merge
+        deltas and the base files of every rewrite), so all manifest zone
+        maps come from the footers written under :meth:`_write_files`.
 
-        Row counts come from footers; the offset span from the tie column's
-        row-group statistics; tombstone counts from reading ONLY the tiny
-        dictionary-encoded ``op`` column. All O(files in this batch).
+        Per file: rows from the footer; the ``ts_min``/``ts_max`` zone map of
+        the first seq column and the ``key_min``/``key_max`` zone map from
+        row-group statistics; tombstones from reading ONLY the file's small
+        ``_deleted`` (base) or dictionary-encoded ``op`` (delta) column.
+        Delta files also get the ``bumps`` flag and, under
+        ``key_bloom_rows``, a key Bloom filter. Per-bucket rows/tombstones go
+        to ``stats.per_bucket``; a delta commit also fills the batch counts
+        and the tie column's span. All O(files written).
         """
         from concurrent.futures import ThreadPoolExecutor
 
@@ -1547,92 +1584,101 @@ class LakeTable:
 
         tie = self.seq_cols[-1]
         ts = self.seq_cols[0]
+        flag = "op" if kind == "delta" else DELETED_COL
 
         def one_file(args):
             b, fe = args
             f = pq.ParquetFile(os.path.join(self.root, fe["path"]))
             md = f.metadata
-            names = [md.schema.column(i).name for i in range(md.num_columns)]
-            op_idx = names.index("op") if "op" in names else None
-            tie_idx = names.index(tie) if tie in names else None
-            ts_idx = names.index(ts) if ts != tie and ts in names else None
-            key_idx = names.index(self.key) if self.key in names else None
-            lo = hi = None
-            ts_lo = ts_hi = None
-            k_lo = k_hi = None
-            for rg in range(md.num_row_groups):
-                if tie_idx is not None:
-                    st = md.row_group(rg).column(tie_idx).statistics
+            paths = [md.schema.column(i).path for i in range(md.num_columns)]
+
+            def bounds(col):
+                # min/max over row groups; a row group with values but no
+                # bounds (stats disabled, or over parquet-mr's 4096-byte
+                # cutoff) leaves the whole file unbounded, never too narrow
+                if col not in paths:
+                    return None, None
+                idx = paths.index(col)
+                lo = hi = None
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(idx).statistics
                     if st is not None and st.has_min_max:
                         lo = st.min if lo is None else min(lo, st.min)
                         hi = st.max if hi is None else max(hi, st.max)
-                if ts_idx is not None:
-                    st = md.row_group(rg).column(ts_idx).statistics
-                    if st is not None and st.has_min_max:
-                        ts_lo = st.min if ts_lo is None else min(ts_lo, st.min)
-                        ts_hi = st.max if ts_hi is None else max(ts_hi, st.max)
-                if key_idx is not None:
-                    st = md.row_group(rg).column(key_idx).statistics
-                    if st is not None and st.has_min_max:
-                        k_lo = st.min if k_lo is None else min(k_lo, st.min)
-                        k_hi = st.max if k_hi is None else max(k_hi, st.max)
+                    elif not (
+                        st is not None and st.has_null_count
+                        and st.null_count == md.row_group(rg).num_rows
+                    ):
+                        return None, None
+                return lo, hi
+
+            lo, hi = bounds(tie)
             # per-file zone map on the first seq column (timestamps are
             # written as TIMESTAMP_MICROS so footer stats exist) — lets
-            # read(min_seq_ts=...) skip whole files, see _acct_written
-            if ts_hi is not None and not isinstance(ts_hi, (int, float, str)):
+            # read(min_seq_ts=...) skip whole files
+            ts_lo, ts_hi = bounds(ts)
+            if isinstance(ts_hi, datetime):
                 fe["ts_min"] = _seq_bound_py(ts_lo)
                 fe["ts_max"] = _seq_bound_py(ts_hi)
             # per-file KEY zone map (parquet-mr's own string statistics are
-            # already sound truncated bounds; ours re-truncate for the
-            # manifest) — read_keys skips delta files whose key range
-            # misses every looked-up key
+            # exact; ours truncate for the manifest) — read_keys skips files
+            # whose key range misses every looked-up key
+            k_lo, k_hi = bounds(self.key)
             if k_hi is not None and isinstance(k_hi, (str, int)):
                 fe["key_min"], fe["key_max"] = _key_bounds_py(k_lo, k_hi)
-            # per-file key BLOOM (small files only): an un-sorted delta's
-            # key RANGE spans most of the key space, so the zone map above
-            # rarely prunes it — the bloom lets read_keys skip it anyway.
-            # One bounded column read in this already-threadpooled footer
-            # pass; no Spark job.
+            # per-file key BLOOM (small delta files only): an un-sorted
+            # delta's key RANGE spans most of the key space, so the zone map
+            # above rarely prunes it — the bloom lets read_keys skip it
+            # anyway. One bounded column read in this already-threadpooled
+            # footer pass; no Spark job.
             if (
-                self.key_bloom_rows is not None
-                and key_idx is not None
+                kind == "delta"
+                and self.key_bloom_rows is not None
+                and self.key in paths
                 and 0 < md.num_rows
                 <= min(self.key_bloom_rows, _BLOOM_MAX_ROWS)
             ):
-                ks = f.read(columns=[self.key]).column(0)
-                py = ks.to_pylist()
+                py = f.read(columns=[self.key]).column(0).to_pylist()
                 if all(isinstance(x, str) for x in py):
                     fe["kbf"], fe["kbf_m"], fe["kbf_k"] = _key_bloom_build(
                         set(py)
                     )
             dead = 0
-            if op_idx is not None:
-                ops = f.read(columns=["op"]).column(0)
-                dead = int(pc.sum(pc.equal(ops, "D")).as_py() or 0)
-                # flag files carrying seq-bump rows so read() engages the
-                # bump-aware resolution only when it has to
-                if int(pc.sum(pc.equal(ops, "B")).as_py() or 0) > 0:
-                    fe["bumps"] = True
+            if flag in paths:
+                col = f.read(columns=[flag]).column(0)
+                if kind == "delta":
+                    dead = int(pc.sum(pc.equal(col, "D")).as_py() or 0)
+                    # flag files carrying seq-bump rows so read() engages
+                    # the bump-aware resolution only when it has to
+                    if int(pc.sum(pc.equal(col, "B")).as_py() or 0) > 0:
+                        fe["bumps"] = True
+                else:
+                    dead = int(pc.sum(col).as_py() or 0)
             return b, md.num_rows, dead, lo, hi
 
         work = [(b, fe) for b, files in new_files.items() for fe in files]
+        if not work:
+            return
         # footer opens are I/O-latency-bound — a thread pool turns ~10 ms ×
         # n_files of serial driver time into one round trip
-        with ThreadPoolExecutor(max_workers=min(16, max(1, len(work)))) as ex:
+        with ThreadPoolExecutor(max_workers=min(16, len(work))) as ex:
             results = list(ex.map(one_file, work))
+        per_b: dict[int, dict[str, int]] = {}
         lo = hi = None
         for b, rows, dead, flo, fhi in results:
-            p = stats.per_bucket.setdefault(int(b), {"rows": 0, "tombstones": 0})
+            p = per_b.setdefault(int(b), {"rows": 0, "tombstones": 0})
             p["rows"] += rows
             p["tombstones"] += dead
-            stats.rows_in += rows
-            stats.rows_deleted += dead
             if flo is not None:
                 lo = flo if lo is None else min(lo, flo)
                 hi = fhi if hi is None else max(hi, fhi)
-        stats.rows_upserted = stats.rows_in - stats.rows_deleted
-        stats.buckets_touched = len(new_files)
-        stats.seq_min, stats.seq_max = lo, hi
+        stats.per_bucket.update(per_b)
+        if kind == "delta":
+            stats.rows_in = sum(p["rows"] for p in per_b.values())
+            stats.rows_deleted = sum(p["tombstones"] for p in per_b.values())
+            stats.rows_upserted = stats.rows_in - stats.rows_deleted
+            stats.buckets_touched = len(new_files)
+            stats.seq_min, stats.seq_max = lo, hi
 
     def overwrite(self, batch_df: DataFrame, batch_id: int | str) -> MergeStats:
         """INSERT OVERWRITE: replace the table's ENTIRE logical state with the
@@ -1683,7 +1729,7 @@ class LakeTable:
         commit_dir = self._new_commit_dir(base_version)
         self._write_partitioned(rows, commit_dir, self.n_buckets)
         new_files = self._list_written(commit_dir, snap, table_schema, stats, kind="base")
-        self._acct_written(commit_dir, stats, kind="base", new_files=new_files)
+        self._stats_from_footers(new_files, stats, kind="base")
         # replace EVERY bucket: old-layout keys with no new files must be
         # explicitly cleared or their files survive manifest resolution
         for b in set(self._resolve_files(snap)) | {str(b) for b in range(self.n_buckets)}:
@@ -1892,7 +1938,7 @@ class LakeTable:
         commit_dir = self._new_commit_dir(base_version)
         self._write_partitioned(result, commit_dir, len(affected))
         new_files = self._list_written(commit_dir, snap, table_schema, stats, kind="base")
-        self._acct_written(commit_dir, stats, kind="base", new_files=new_files)
+        self._stats_from_footers(new_files, stats, kind="base")
         return self._commit(snap, base_version, new_files, stats, table_schema, append=False, operation="merge-cow")
 
     def _align_keep(self, df: DataFrame, phys: T.StructType) -> DataFrame:
@@ -2056,7 +2102,7 @@ class LakeTable:
         snap_new["n_buckets"] = n_buckets
         snap_new["bucket_stats"] = {}
         new_files = self._list_written(commit_dir, snap_new, table_schema, stats, kind="base")
-        self._acct_written(commit_dir, stats, kind="base", new_files=new_files)
+        self._stats_from_footers(new_files, stats, kind="base")
         for b in range(n_buckets):
             new_files.setdefault(str(b), [])
             stats.per_bucket.setdefault(b, {"rows": 0, "tombstones": 0})
@@ -2106,7 +2152,7 @@ class LakeTable:
         new_files = self._list_written(commit_dir, snap, table_schema, stats, kind="base")
         for b in buckets:
             new_files.setdefault(str(b), [])
-        self._acct_written(commit_dir, stats, kind="base", new_files=new_files)
+        self._stats_from_footers(new_files, stats, kind="base")
         for b in buckets:
             stats.per_bucket.setdefault(b, {"rows": 0, "tombstones": 0})
         return self._commit(snap, base_version, new_files, stats, table_schema, append=False, operation=operation)
@@ -2131,15 +2177,15 @@ class LakeTable:
         if sort_key:
             # Cluster each bucket by the KEY: with ``max_file_rows`` each
             # rolled file covers a contiguous, non-overlapping key range, so
-            # the per-file key zone map (_acct_written) lets read_keys open
-            # ~one file per looked-up key. Same required-ordering trick as
-            # the seq clustering below.
+            # the per-file key zone map (_stats_from_footers) lets read_keys
+            # open ~one file per looked-up key. Same required-ordering trick
+            # as the seq clustering below.
             out = out.sortWithinPartitions(F.col(_BUCKET_COL), F.col(self.key))
         elif sort_seq:
             # Cluster each bucket by its sequence columns: with
             # ``max_file_rows`` the writer rolls a new file every N rows, so
             # each file covers a CONTIGUOUS, non-overlapping seq range — the
-            # per-file ts zone map (_acct_written) then lets
+            # per-file ts zone map (_stats_from_footers) then lets
             # ``read(min_seq_ts=...)`` skip most of a bucket's base files
             # instead of scanning the whole bucket. Leading the sort with the
             # bucket column satisfies the partitioned writer's required
@@ -2147,7 +2193,25 @@ class LakeTable:
             out = out.sortWithinPartitions(
                 F.col(_BUCKET_COL), *[F.col(c) for c in self.seq_cols]
             )
-        writer = out.write.partitionBy(_BUCKET_COL).mode("overwrite")
+        self._write_files(out, commit_dir, max_file_rows)
+
+    def _write_files(
+        self, df: DataFrame, commit_dir: str, max_file_rows: int | None = None
+    ) -> None:
+        """The one data-file write of every commit: ``_bucket``-partitioned
+        parquet under ``commit_dir``, with the lake's footer policy. Min/max
+        statistics stay on the key, the sequence columns and every
+        non-byte-array column; every other string/binary leaf (page html and
+        text, hashes, ``op``, nested strings) is written without them. No
+        reader prunes on those columns, and parquet-mr keeps their full
+        min/max in each footer whenever the pair fits in 4096 bytes — a
+        third of a small delta file on ~1 KB pages. :meth:`read_keys` and
+        ``read(min_seq_ts=...)`` prune on the retained columns only."""
+        writer = df.write.partitionBy(_BUCKET_COL).mode("overwrite")
+        for path in _blind_stat_paths(df.schema, {self.key, *self.seq_cols}):
+            writer = writer.option(
+                f"parquet.column.statistics.enabled#{path}", "false"
+            )
         if max_file_rows is not None:
             writer = writer.option("maxRecordsPerFile", int(max_file_rows))
         writer.parquet(commit_dir)
@@ -2175,95 +2239,6 @@ class LakeTable:
                     stats.bytes_written += fe["bytes"]
             new_files[b] = flist
         return new_files
-
-    def _acct_written(
-        self,
-        commit_dir: str,
-        stats: MergeStats,
-        kind: str,
-        new_files: dict[str, list[dict]] | None = None,
-    ) -> None:
-        """Per-bucket row accounting by reading ONLY the files just written
-        (footer row counts + one small column — never re-runs the merge).
-
-        When ``new_files`` is given, the same single pass also collects a
-        per-FILE min/max of the first sequence column and attaches it to the
-        manifest entries (``ts_min``/``ts_max`` zone maps) — ``read(
-        min_seq_ts=...)`` uses these to skip files that cannot contain fresh
-        rows — plus a per-file min/max of the KEY column (``key_min``/
-        ``key_max``, string bounds truncated Iceberg-style by
-        ``_key_bounds_py``) that :meth:`read_keys` uses to skip files whose
-        key range misses every looked-up key. Extra aggregates in an
-        already-running job; no new job.
-        """
-        if not any(e.startswith(f"{_BUCKET_COL}=") for e in os.listdir(commit_dir)):
-            return  # nothing written (e.g. vacuum emptied the table)
-        dead = (
-            F.col(DELETED_COL).cast("long") if kind == "base" else (F.col("op") == "D").cast("long")
-        )
-        ts = self.seq_cols[0]
-        acct_df = self.spark.read.parquet(commit_dir)
-        track_ts = (
-            new_files is not None
-            and ts in acct_df.columns
-            # NTZ too: a parquet source with isAdjustedToUTC=false infers
-            # TimestampNTZType, and the merge path's footer accounting
-            # already stamps zone maps for it — rewrites must match or a
-            # compaction silently DROPS the table's file-skipping bounds
-            and isinstance(
-                acct_df.schema[ts].dataType,
-                (T.TimestampType, T.TimestampNTZType),
-            )
-        )
-        track_key = (
-            new_files is not None
-            and self.key in acct_df.columns
-            and isinstance(
-                acct_df.schema[self.key].dataType,
-                (T.StringType, T.LongType, T.IntegerType,
-                 T.ShortType, T.ByteType),
-            )
-        )
-        file_key = F.input_file_name() if (track_ts or track_key) else F.lit("")
-        aggs = [F.count("*").alias("rows"), F.sum(dead).alias("dead")]
-        if track_ts:
-            aggs += [
-                _seq_bound(F.min(ts)).alias("ts_min"),
-                _seq_bound(F.max(ts)).alias("ts_max"),
-            ]
-        if track_key:
-            aggs += [
-                F.min(self.key).alias("_key_min"),
-                F.max(self.key).alias("_key_max"),
-            ]
-        acct = (
-            acct_df.groupBy(F.col(_BUCKET_COL), file_key.alias("_file"))
-            .agg(*aggs)
-            .collect()
-        )
-        by_path: dict[str, dict] = {}
-        if track_ts or track_key:
-            for files in new_files.values():
-                for fe in files:
-                    by_path[os.path.normpath(fe["path"])] = fe
-        per_b: dict[int, dict[str, int]] = {}
-        for r in acct:
-            p = per_b.setdefault(int(r[_BUCKET_COL]), {"rows": 0, "tombstones": 0})
-            p["rows"] += r["rows"]
-            p["tombstones"] += int(r["dead"] or 0)
-            fe = None
-            if track_ts or track_key:
-                rel = os.path.normpath(
-                    os.path.relpath(r["_file"].removeprefix("file:"), self.root)
-                )
-                fe = by_path.get(rel)
-            if fe is not None and track_ts and r["ts_min"] is not None:
-                fe["ts_min"], fe["ts_max"] = r["ts_min"], r["ts_max"]
-            if fe is not None and track_key and r["_key_min"] is not None:
-                fe["key_min"], fe["key_max"] = _key_bounds_py(
-                    r["_key_min"], r["_key_max"]
-                )
-        stats.per_bucket.update(per_b)
 
     def _next_schema_id(self, snap: dict, table_schema: T.StructType) -> int:
         for sid, sj in snap["schemas"].items():
@@ -2538,7 +2513,7 @@ class LakeTable:
         new_files = self._list_written(commit_dir, snap, table_schema, stats, kind="base")
         for b in buckets:
             new_files.setdefault(str(b), [])
-        self._acct_written(commit_dir, stats, kind="base", new_files=new_files)
+        self._stats_from_footers(new_files, stats, kind="base")
         for b in buckets:
             stats.per_bucket.setdefault(b, {"rows": 0, "tombstones": 0})
         return self._commit(snap, base_version, new_files, stats, table_schema, append=False, operation="vacuum")

@@ -103,9 +103,12 @@ def main() -> None:
         sys.exit(1)
     elapsed = time.time() - t0
     published = None
+    # after a publish the result lives on main, not on the branch handle
+    out = pipe.table
     if args.branch and args.publish:
         published = pipe.publish_branch(mode=args.publish)
-    rows = pipe.table.read().count()
+        out = pipe.main_table
+    rows = out.read().count()
     report = [r.asDict() for r in pipe.throughput_report().collect()]
     events = sum(r["rows_in"] for r in report)
     print(
@@ -116,7 +119,7 @@ def main() -> None:
                 "batches": len(report),
                 "rows_merged": events,
                 "rows_per_sec": round(events / elapsed, 1) if elapsed else None,
-                "table_version": pipe.table.current_version(),
+                "table_version": out.current_version(),
                 "branch": args.branch,
                 "published_version": published,
             }

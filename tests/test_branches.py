@@ -12,6 +12,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_pipelines_spark.lake.table import ConcurrentCommitError, LakeTable
 
@@ -355,6 +356,24 @@ def test_publish_rebase_skips_reorgs_and_evolves_schema(spark, tmp_root):
     t.publish("staging", mode="rebase")
     got = {r.url: r.lang for r in t.read().collect()}
     assert got == {"u1": None, "u2": None, "u3": "en", "u4": "fr", "u5": None}
+
+
+def test_publish_rebase_replays_schema_update_with_colliding_id(spark, tmp_root):
+    """A staged schema-update whose batch id main's ledger already holds
+    (both heads used the default 'schema-update' id after the fork) still
+    reaches main on a rebase publish, exactly once."""
+    t = _mk(spark, tmp_root)
+    t.create_branch("staging")
+    b = t.branch("staging")
+    base = t.schema()
+    b.update_schema(T.StructType(base.fields + [T.StructField("lang", T.StringType())]))
+    t.update_schema(T.StructType(base.fields + [T.StructField("score", T.DoubleType())]))
+    assert "schema-update" in t.ledger()
+    t.publish("staging", mode="rebase")
+    assert {"lang", "score"} <= set(t.schema().fieldNames())
+    v = t.current_version()
+    t.publish("staging", mode="rebase")  # rerun: the replay is in the ledger
+    assert t.current_version() == v
 
 
 def test_publish_rebase_refuses_folded_commits(spark, tmp_root):
