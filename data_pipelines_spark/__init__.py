@@ -4,7 +4,7 @@ A from-scratch engine with the capabilities of the reference ETL pipeline
 (serpcompany/data-pipelines), re-expressed Spark-first:
 
 - ``lake``       — snapshot-based Parquet lake-table layer (atomic commit,
-                   copy-on-write MERGE, time travel, schema evolution).
+                   merge-on-read MERGE, time travel, schema evolution).
 - ``gen``        — deterministic synthetic web-page + change-stream generator.
 - ``operators``  — LWW dedup, change filter, dedup family (exact / MinHash-LSH /
                    SimHash / n-gram), similarity search, validation suite.

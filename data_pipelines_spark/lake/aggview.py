@@ -407,8 +407,9 @@ class AggView:
             log = table.change_log(pre_v, post_v)
             touched = log.select(key).distinct()
         except ChangeLogUnavailableError:
-            # CoW merges fold deltas into base files; the snapshot diff
-            # still yields the touched keys (O(affected buckets), not O(batch))
+            # overwrite / backfill / rollback commits carry no delta rows;
+            # the snapshot diff still yields the touched keys
+            # (O(affected buckets), not O(batch))
             touched = table.changes(pre_v, post_v).select(key).distinct()
         # the touched-key frame can be referenced several times below (the
         # layout-fallback bucket probe + the pre/post semi-joins) and Spark

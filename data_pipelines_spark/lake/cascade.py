@@ -23,7 +23,7 @@ Scale shape: each hop is one delta-merge job over ONE upstream commit's
 delta files — the downstream per-batch floor equals the upstream's, and a
 lagging cascade catching up over k commits runs k bounded jobs rather than
 one unbounded table diff. Upstream commits that fold changes into base
-files (copy-on-write merges, rollback, backfill) have no delta rows — the
+files (overwrite, rollback, backfill) have no delta rows — the
 cascade surfaces :class:`ChangeLogUnavailableError` and the remedy is
 :meth:`Cascade.rebuild` (same contract as ``AggView.rebuild`` after a
 backfill). Upstream ``expire_snapshots`` retention bounds how far back a
@@ -176,9 +176,9 @@ class Cascade:
         """Full re-sync via downstream ``INSERT OVERWRITE``: replace the
         downstream state with the transformed upstream CURRENT state
         (tombstones carried, sequences untouched) — the remedy after a
-        fold-into-base upstream commit (CoW merge / backfill / rollback /
-        overwrite) or expired lag. Because overwrite does not consult the
-        downstream's stored sequences, this converges even when the
+        fold-into-base upstream commit (backfill / rollback / overwrite) or
+        expired lag. Because overwrite does not consult the downstream's
+        stored sequences, this converges even when the
         downstream is "ahead" (upstream rolled back) — the one case a
         merge-based rebuild could never fix. Exactly-once per upstream
         version via the deterministic batch id."""

@@ -19,8 +19,7 @@ Scale design (targets a 1000-executor cluster over ~100 TB):
   a follow-up commit — the per-bucket stagger keeps steady-state batches
   compacting ~1/stagger of the buckets instead of all at once. Ingest cost
   is therefore independent of table size; read amplification is bounded by
-  ``compact_threshold + compact_stagger - 1``. (``strategy="cow"`` forces
-  the classic join-rewrite merge for comparison.)
+  ``compact_threshold + compact_stagger - 1``.
 - **Partition pruning**: both deltas and compaction touch only the hash
   buckets present in the batch. ``n_buckets`` is the scale knob — 16
   locally, thousands in production.
@@ -38,31 +37,37 @@ Scale design (targets a 1000-executor cluster over ~100 TB):
   the previous consistent snapshot.
 
 Concurrent writers (optimistic concurrency, the Iceberg commit-retry
-analog): the snapshot file's exclusive create is the commit CAS — exactly
-one writer can ever own version N. A loser's data files are already on
-disk, so it rebases metadata-only onto the winner's snapshot and retries
-(``commit_retries``): LWW delta merges commute with any commit and always
-rebase; rewrite commits (compact / CoW / vacuum / backfill) revalidate
-their read set (the rewritten buckets' file lists must be untouched) and
-fail loud otherwise; rebucket / rollback never rebase. A writer that
-crashes between creating its snapshot file and moving CURRENT leaves the
-version slot taken — subsequent commits fail loud with a repair hint
-rather than guessing.
+analog) and writable branches share ONE commit protocol:
+
+- **Slot.** A commit takes a global version slot — the next integer above
+  every snapshot file on disk — by exclusive create of ``v{N}.json``.
+- **Swap.** It then moves its head's pointer file (``CURRENT`` or a
+  branch ref) with the check and the replace done under an exclusive
+  ``flock`` on ``metadata/LOCK``. The kernel drops the lock when a process
+  dies, so a crash leaves no stale lock.
+- **Retry.** A writer whose head moved unlinks its own snapshot file and
+  manifests, rebases metadata-only onto the new head and retries
+  (``commit_retries``): LWW delta merges commute with any commit and always
+  rebase; rewrite commits (compact / overwrite / vacuum / backfill)
+  revalidate their read set (the rewritten buckets' file lists must be
+  untouched) and fail loud otherwise; rebucket / rollback never rebase. A
+  taken slot on an unmoved head — another lineage's commit, or the orphan
+  snapshot of a writer that crashed before its swap — just retries on a
+  fresh number, and :meth:`LakeTable.expire_snapshots` deletes the orphan.
 
 Writable branches (Iceberg refs — the write-audit-publish primitive):
 ``create_branch`` forks a movable head into the same snapshot DAG;
 ``branch(name)`` returns a handle with the FULL table surface scoped to
 that head; ``fast_forward`` publishes by pointer swap (ancestry-checked,
 ledger rides with the snapshot so exactly-once crosses the publish).
-Branch-enabled tables allocate version slots globally (unique across
-lineages, monotone-not-consecutive per lineage; all chain walks follow
-``parent`` pointers), and a taken slot retries with a fresh number
-instead of the linear table's crashed-writer refusal.
+Version numbers on one lineage are monotone but not consecutive, so every
+chain walk (history, change_log, retention) follows ``parent`` pointers.
 """
 
 from __future__ import annotations
 
 import base64
+import fcntl
 import json
 import os
 import shutil
@@ -89,8 +94,9 @@ class ConcurrentCommitError(RuntimeError):
 
 class ChangeLogUnavailableError(RuntimeError):
     """change_log() cannot reconstruct row-level deltas for this version
-    range (copy-on-write merge folded them into rewritten base files, or a
-    legacy commit lacks the operation tag). ``changes()`` always works."""
+    range (an overwrite / backfill / rollback folded them into rewritten
+    files, or a legacy commit lacks the operation tag). ``changes()`` always
+    works."""
 
 
 class SchemaEvolutionError(ValueError):
@@ -273,6 +279,7 @@ class LakeTable:
           metadata/v{N}.json                            # snapshot N
           metadata/m{N}-{uuid}.json                     # commit N's manifest
           metadata/CURRENT                              # atomic pointer
+          metadata/LOCK                                 # flock per pointer swap
 
     Snapshot JSON: schema registry (``schemas``: schema_id → StructType
     json), the ordered manifest chain (per-bucket file lists live in the
@@ -343,15 +350,9 @@ class LakeTable:
         #: single-writer refusal. Rebase is proven safe per operation — see
         #: :meth:`_rebase` for the commute/validation rules.
         self.commit_retries: int = 4
-        #: how long a CAS loser waits for the winner's CURRENT swap before
-        #: declaring the version slot orphaned (the winner's window between
-        #: snapshot-file create and pointer swap is microseconds; the grace
-        #: covers GC/scheduler pauses). Recovery-path pacing only — never
-        #: touches data or replay determinism.
-        self.commit_grace_s: float = 5.0
         self._meta_dir = os.path.join(root, "metadata")
         self._data_dir = os.path.join(root, "data")
-        self._manifest_cache: dict[int, dict] = {}
+        self._manifest_cache: dict[tuple, dict] = {}
         #: which head this handle reads and commits against: "CURRENT" (main)
         #: or "BRANCH-<name>" for a handle returned by :meth:`branch`. Every
         #: state read (`_snapshot()`), commit base, ledger check, and the
@@ -451,9 +452,12 @@ class LakeTable:
         """Materialize the per-bucket file lists for a snapshot: legacy
         inline ``files`` as the base, then the manifest chain in order
         (append extends a bucket's list; replace resets every bucket the
-        manifest mentions). Cached per version — manifests are immutable."""
-        v = snap["version"]
-        cached = self._manifest_cache.get(v)
+        manifest mentions). Cached per (version, manifest chain) —
+        manifests are immutable and their names unique, so a cache entry can
+        never outlive its snapshot file (a lost commit attempt, or a slot
+        number reused after GC deleted the highest snapshot)."""
+        ck = (snap["version"], tuple(snap.get("manifests", [])))
+        cached = self._manifest_cache.get(ck)
         if cached is not None:
             return cached
         files: dict[str, list[dict]] = {
@@ -467,7 +471,7 @@ class LakeTable:
                     files[b] = files[b] + fl
                 else:
                     files[b] = list(fl)
-        self._manifest_cache[v] = files
+        self._manifest_cache[ck] = files
         return files
 
     def _resolve_version(self, version: int | str | None) -> int | None:
@@ -563,19 +567,12 @@ class LakeTable:
     # entries arrive with the snapshot, so a re-delivered batch stays
     # exactly-once across the publish boundary.
     #
-    # Version slots: a linear table allocates slot base+1 (the classic CAS).
-    # Once ANY branch has ever existed (the ``BRANCHES`` sentinel, never
-    # removed), slots are allocated globally — the next integer above every
-    # slot on disk — so lineages never contend for a number except in a true
-    # write race, which the slot CAS + re-scan retry resolves. Version
-    # numbers on one lineage are then monotone but NOT consecutive; every
-    # chain walk in the engine (change_log, history, is_ancestor) follows
-    # ``parent`` pointers, never arithmetic.
+    # Version slots are global (see :meth:`_alloc_slot`), so version
+    # numbers on one lineage are monotone but NOT consecutive; every chain
+    # walk in the engine (change_log, history, is_ancestor, retention)
+    # follows ``parent`` pointers, never arithmetic.
 
     _BRANCH_PREFIX = "BRANCH-"
-
-    def _branches_enabled(self) -> bool:
-        return os.path.exists(os.path.join(self._meta_dir, "BRANCHES"))
 
     def _branch_file(self, name: str) -> str:
         return os.path.join(self._meta_dir, self._BRANCH_PREFIX + name)
@@ -625,12 +622,6 @@ class LakeTable:
             else self._resolve_version(version)
         )
         self._snapshot(v)  # must exist (and not be expired)
-        # sentinel BEFORE the branch becomes visible: from here on every
-        # writer (this process or a concurrent one) allocates global slots
-        sent = os.path.join(self._meta_dir, "BRANCHES")
-        if not os.path.exists(sent):
-            with open(sent, "w") as f:
-                f.write("global version-slot allocation is on\n")
         path = self._branch_file(name)
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
@@ -755,8 +746,8 @@ class LakeTable:
         schema-update commits re-apply under the batch id
         ``rebase:<branch>:<version>:<batch_id>`` (so a same-named update
         already on this head cannot mask them); fold-into-base commits on the
-        branch (CoW merge / overwrite / rollback / backfill) cannot be
-        replayed row-wise and refuse loud. Rebase publish is batch-atomic,
+        branch (overwrite / rollback / backfill) cannot be replayed row-wise
+        and refuse loud. Rebase publish is batch-atomic,
         not all-or-nothing: a crash mid-way leaves a prefix published —
         rerun to complete (the ledger skips what landed). Cost: O(changes
         on the branch), never O(table) — each commit's rows come from its
@@ -819,12 +810,9 @@ class LakeTable:
         return self.current_version()
 
     def _write_snapshot(self, snap: dict) -> None:
-        """Exclusive-create of the version file — the commit CAS.
-
-        ``os.link`` fails with EEXIST if the slot is taken, so exactly one
-        writer can ever own version N; the subsequent CURRENT swap is then
-        uncontended (a competitor would have had to win this link first).
-        """
+        """Exclusive-create of the version file — the slot CAS: ``os.link``
+        fails with EEXIST if the slot is taken, so exactly one writer can
+        ever own version N."""
         path = os.path.join(self._meta_dir, f"v{snap['version']}.json")
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
@@ -842,43 +830,45 @@ class LakeTable:
             os.unlink(tmp)
 
     def _swap_pointer(self, expected: int | None, new_version: int) -> None:
-        """Atomic last-step commit: tmp write + rename of the CURRENT pointer.
+        """Atomic last-step commit: move this handle's head pointer to
+        ``new_version``, refusing if it no longer points at ``expected``.
 
-        ``expected`` guards the single-writer assumption — if another writer
-        advanced the pointer since this merge read its base snapshot, refuse.
-        """
+        The check and the tmp-write + rename run under an exclusive
+        ``flock`` on ``metadata/LOCK``, so no other writer (another process,
+        or another handle in this one — each ``open`` is its own lock) can
+        move any head between them. The kernel releases the lock when the
+        holder dies."""
         cur_path = os.path.join(self._meta_dir, self._pointer)
-        if expected is not None:
-            actual = self.current_version()
-            if actual != expected:
-                raise ConcurrentCommitError(
-                    f"expected snapshot v{expected}, found v{actual}"
-                )
-        tmp = cur_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(new_version))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, cur_path)
+        with open(os.path.join(self._meta_dir, "LOCK"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            if expected is not None:
+                actual = self.current_version()
+                if actual != expected:
+                    raise ConcurrentCommitError(
+                        f"expected snapshot v{expected}, found v{actual}"
+                    )
+            tmp = cur_path + f".tmp-{uuid.uuid4().hex}"
+            with open(tmp, "w") as f:
+                f.write(str(new_version))
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, cur_path)
+
+    def _snapshot_versions(self) -> set[int]:
+        """Versions of every snapshot file on disk, on any lineage."""
+        out = set()
+        for fn in os.listdir(self._meta_dir):
+            if fn.startswith("v") and fn.endswith(".json") and fn[1:-5].isdigit():
+                out.add(int(fn[1:-5]))
+        return out
 
     def _alloc_slot(self, base_version: int) -> int:
-        """Version slot for the next commit. Linear tables (no branch ever
-        created) use base+1 — the classic CAS slot, preserving the
-        crashed-writer fail-loud contract. Branch-enabled tables allocate
-        globally: the next integer above every slot on disk, so main and
-        branch commits never contend for a number except in a true write
-        race (resolved by the slot CAS + re-scan retry in ``_rebase``).
-        O(metadata-dir listing) driver-side, bounded by snapshot retention."""
-        if not self._branches_enabled():
-            return base_version + 1
-        mx = base_version
-        for fn in os.listdir(self._meta_dir):
-            if fn.startswith("v") and fn.endswith(".json"):
-                try:
-                    mx = max(mx, int(fn[1:-5]))
-                except ValueError:
-                    pass
-        return mx + 1
+        """Version slot for the next commit: the next integer above every
+        snapshot file on disk, so commits on different heads never contend
+        for a number except in a true race, which the slot CAS resolves by
+        retrying on a fresh number. O(metadata-dir listing), bounded by
+        snapshot retention."""
+        return max({base_version, *self._snapshot_versions()}) + 1
 
     # ---------------------------------------------------------------- schema
 
@@ -1207,7 +1197,8 @@ class LakeTable:
         """Net row-level change feed between two snapshots (CDC-out).
 
         Snapshot-diff semantics (the general path — works across ANY commit
-        mix: merges, copy-on-write, compaction, vacuum, schema evolution):
+        mix: merges, overwrite, backfill, compaction, vacuum, schema
+        evolution):
         full-outer-join the live states at the two versions on the key and
         classify each key by its sequence tuple —
 
@@ -1277,7 +1268,7 @@ class LakeTable:
         tombstone vacuum and schema-update commits are physical/metadata
         reorganizations — they contribute no rows and are skipped, so the log
         stays available across the steady-state auto-compaction cadence.
-        Copy-on-write merges fold their changes into rewritten base files and
+        Overwrite, backfill and rollback commits carry no delta rows and
         raise :class:`ChangeLogUnavailableError` (use :meth:`changes`).
 
         Rows are the post-dedup batch contents: per-key LWW winners of each
@@ -1330,11 +1321,6 @@ class LakeTable:
                 added.extend((v, fe) for fe in new)
             elif op in ("compact", "vacuum", "schema-update", "rebucket"):
                 pass  # physical/metadata reorganizations: no logical deltas
-            elif op == "merge-cow":
-                raise ChangeLogUnavailableError(
-                    f"v{v} is a copy-on-write merge; row-level deltas were "
-                    "folded into rewritten base files — use changes()"
-                )
             elif op == "rollback":
                 raise ChangeLogUnavailableError(
                     f"v{v} is a rollback/restore; the range's net row-level "
@@ -1397,7 +1383,6 @@ class LakeTable:
         self,
         batch_df: DataFrame,
         batch_id: int | str,
-        strategy: str = "delta",
         transform_after_dedup=None,
         salt_dedup: int = 0,
     ) -> MergeStats:
@@ -1409,9 +1394,9 @@ class LakeTable:
         stored sequences. Re-delivered ``batch_id``s are skipped via the
         snapshot ledger (exactly-once).
 
-        ``strategy='delta'`` (default) appends delta files — O(batch) work —
-        and compacts buckets past ``compact_threshold``. ``strategy='cow'``
-        does the classic read-join-rewrite of every affected bucket.
+        The deduped batch is appended as delta files — O(batch) work, no
+        read of existing data — and buckets past ``compact_threshold`` are
+        compacted.
 
         ``transform_after_dedup`` (df → df) runs expensive derivations (e.g.
         html→text decode UDFs) on the deduped winners only — losers and
@@ -1469,49 +1454,11 @@ class LakeTable:
         )
         table_schema, evolved = self._evolve_schema(snap, payload_schema)
         stats.schema_evolved = evolved and snap["current_schema_id"] is not None
-        if strategy == "delta":
-            # single-job fast path: write the deltas, derive every stat from
-            # the written files' footers driver-side (no pre-agg job, no
-            # persist) — the per-batch floor is one Spark job.
-            return self._merge_delta(deduped, stats, base_version, snap, table_schema)
-        deduped = deduped.persist()
-        try:
-            # ONE pre-merge job: affected buckets + row/delete counts + span
-            # (collect bounded by n_buckets — driver-safe at any data scale)
-            tie = self.seq_cols[-1]
-            pre = (
-                deduped.groupBy(_BUCKET_COL)
-                .agg(
-                    F.count("*").alias("rows"),
-                    F.sum((F.col("op") == "D").cast("long")).alias("deletes"),
-                    F.min(tie).alias("lo"),
-                    F.max(tie).alias("hi"),
-                )
-                .collect()
-            )
-            affected = [r[_BUCKET_COL] for r in pre]
-            stats.buckets_touched = len(affected)
-            stats.rows_in = sum(r["rows"] for r in pre)
-            n_deletes = sum(int(r["deletes"] or 0) for r in pre)
-            stats.rows_upserted = stats.rows_in - n_deletes
-            stats.rows_deleted = n_deletes
-            if pre:
-                stats.seq_min = min(r["lo"] for r in pre)
-                stats.seq_max = max(r["hi"] for r in pre)
-            for r in pre:  # delta accounting: rows appended per bucket
-                stats.per_bucket[int(r[_BUCKET_COL])] = {
-                    "rows": r["rows"],
-                    "tombstones": int(r["deletes"] or 0),
-                }
-            if not affected:
-                return self._commit(snap, base_version, {}, stats, table_schema, append=False, operation="merge-cow")
-            return self._merge_cow(deduped, stats, base_version, snap, table_schema, affected)
-        finally:
-            deduped.unpersist()
-
-    # -------------------------------------------------------- delta strategy
+        return self._merge_delta(deduped, stats, base_version, snap, table_schema)
 
     def _merge_delta(self, deduped, stats, base_version, snap, table_schema):
+        # single-job path: write the deltas, derive every stat from the
+        # written files' footers driver-side (no pre-agg job, no persist)
         to_write = self._align(
             deduped, T.StructType(
                 list(self._phys_schema(table_schema, "delta").fields)
@@ -1878,73 +1825,6 @@ class LakeTable:
             F.lit("U").alias("op"), F.col(self.key), *seq_exprs, *payload
         )
 
-    # ---------------------------------------------------------- cow strategy
-
-    def _merge_cow(self, deduped, stats, base_version, snap, table_schema, affected):
-        phys = self._phys_schema(table_schema, "base")
-        snap_files = self._resolve_files(snap)
-        have_data = snap["current_schema_id"] is not None and any(
-            snap_files.get(str(b)) for b in affected
-        )
-        if have_data:
-            current = self.read(version=base_version, buckets=affected, include_tombstones=True)
-            current = self._align_keep(current, phys)
-        else:
-            current = self.spark.createDataFrame([], phys)
-
-        new_side = self._align(
-            deduped.drop(_BUCKET_COL),
-            T.StructType(list(table_schema.fields) + [T.StructField("op", T.StringType(), True)]),
-        )
-        c, n = current.alias("c"), new_side.alias("n")
-        joined = c.join(n, on=F.col(f"c.{self.key}") == F.col(f"n.{self.key}"), how="full_outer")
-        c_seq = F.struct(*[F.col(f"c.{s}") for s in self.seq_cols])
-        n_seq = F.struct(*[F.col(f"n.{s}") for s in self.seq_cols])
-        take_new = F.col(f"n.{self.key}").isNotNull() & (
-            F.col(f"c.{self.key}").isNull() | (n_seq >= c_seq)
-        )
-        # seq-bump winners (op='B', payload-free) advance the sequence but
-        # KEEP the current row's payload — without this branch a winning
-        # bump would overwrite content with its NULLs (and the COW rewrite
-        # would make that loss permanent). An unmaterializable bump (no
-        # current row, or current is a tombstone) resolves to a tombstone,
-        # matching lww_resolve_bumps on the merge-on-read path.
-        take_bump = take_new & (F.col("n.op") == F.lit("B"))
-        out_cols = []
-        for f_ in table_schema.fields:
-            if f_.name in self.seq_cols:
-                col = F.when(take_new, F.col(f"n.{f_.name}")).otherwise(
-                    F.col(f"c.{f_.name}")
-                )
-            else:
-                col = (
-                    F.when(take_bump, F.col(f"c.{f_.name}"))
-                    .when(take_new, F.col(f"n.{f_.name}"))
-                    .otherwise(F.col(f"c.{f_.name}"))
-                )
-            out_cols.append(col.alias(f_.name))
-        out_cols.append(
-            F.when(
-                take_bump,
-                F.coalesce(F.col(f"c.{DELETED_COL}"), F.lit(True)),
-            )
-            .when(take_new, F.col("n.op") == F.lit("D"))
-            .otherwise(F.coalesce(F.col(f"c.{DELETED_COL}"), F.lit(False)))
-            .alias(DELETED_COL)
-        )
-        result = joined.select(*out_cols).withColumn(
-            _BUCKET_COL, bucket_id(F.col(self.key), self.n_buckets)
-        )
-        commit_dir = self._new_commit_dir(base_version)
-        self._write_partitioned(result, commit_dir, len(affected))
-        new_files = self._list_written(commit_dir, snap, table_schema, stats, kind="base")
-        self._stats_from_footers(new_files, stats, kind="base")
-        return self._commit(snap, base_version, new_files, stats, table_schema, append=False, operation="merge-cow")
-
-    def _align_keep(self, df: DataFrame, phys: T.StructType) -> DataFrame:
-        """Align a read() output (already has _deleted) to a physical schema."""
-        return self._align(df, phys)
-
     # ------------------------------------------------------------ compaction
 
     def compact(
@@ -2262,10 +2142,10 @@ class LakeTable:
         operation: str = "merge",
     ) -> MergeStats:
         """Commit with optimistic-concurrency retry (Iceberg's commit loop):
-        on losing the version-slot CAS, :meth:`_rebase` revalidates the
-        commit against the new current snapshot and rebuilds its metadata —
-        the already-written data files are reused verbatim, so a retry is
-        metadata-only (no Spark job reruns)."""
+        on losing the slot CAS or the pointer swap, :meth:`_rebase`
+        revalidates the commit against the head's new snapshot and rebuilds
+        its metadata — the already-written data files are reused verbatim,
+        so a retry is metadata-only (no Spark job reruns)."""
         retries = max(0, int(self.commit_retries))
         for attempt in range(retries + 1):
             try:
@@ -2273,15 +2153,7 @@ class LakeTable:
                     snap, base_version, file_updates, stats, table_schema,
                     append, operation,
                 )
-            except ConcurrentCommitError as e:
-                # the failed attempt may have cached its (never-committed)
-                # resolved file map under the attempted version — drop it or
-                # reads of the WINNER's snapshot through this handle lie
-                # (the attempt version rides on the exception: local to this
-                # commit, never racing another thread's attempt)
-                self._manifest_cache.pop(
-                    getattr(e, "attempt_version", base_version + 1), None
-                )
+            except ConcurrentCommitError:
                 if attempt >= retries:
                     raise
                 rebased = self._rebase(
@@ -2307,16 +2179,19 @@ class LakeTable:
         append: bool,
         operation: str,
     ):
-        """Revalidate + rebuild a lost commit against the new current
+        """Revalidate + rebuild a lost commit against the head's new
         snapshot. Returns ``(snap, base_version, file_updates,
         table_schema)`` for the retry, ``None`` if the batch_id turned out
         to be a concurrent duplicate delivery, or raises
         ``ConcurrentCommitError`` when the commit cannot be PROVEN safe:
 
+        - **unmoved head**: the slot was taken by another lineage's commit
+          or a crashed writer's orphan — the commit is still valid as-is
+          and retries on a fresh slot;
         - **append commits** (delta merge / schema-update) commute with any
           commit under LWW — the delta is a pure function of the batch, so
           the rebase equals running the merge after the winner sequentially;
-        - **rewrite commits** (compact / merge-cow / backfill / vacuum)
+        - **rewrite commits** (compact / overwrite / backfill / vacuum)
           were computed FROM the base file set, so every bucket they replace
           must be byte-identical between old and new base (read-set
           validation) — concurrent appends to OTHER buckets are inherited;
@@ -2327,27 +2202,8 @@ class LakeTable:
           written schema's id under the NEW snapshot's registry.
         """
         new_base = self.current_version()
-        if new_base == base_version and self._branches_enabled():
-            # global slot allocation: the taken slot belongs to ANOTHER
-            # lineage (or a racing writer we can re-scan past) — this
-            # head hasn't moved, so the commit itself is still valid;
-            # retry as-is and _alloc_slot will pick the next free number
+        if new_base == base_version:
             return snap, base_version, file_updates, table_schema
-        if new_base == base_version:
-            # the slot's owner is between its snapshot-file create and its
-            # CURRENT swap (a microsecond window) — wait it out before
-            # declaring the writer dead
-            deadline = time.monotonic() + max(0.0, self.commit_grace_s)
-            while new_base == base_version and time.monotonic() < deadline:
-                time.sleep(0.02)
-                new_base = self.current_version()
-        if new_base == base_version:
-            raise ConcurrentCommitError(
-                f"version slot v{base_version + 1} is taken but CURRENT "
-                f"still points at v{base_version} — a writer crashed "
-                "mid-commit; refusing to rebase (remove the orphan "
-                "snapshot file to repair)"
-            )
         new_snap = self._snapshot(new_base)
         if str(stats.batch_id) in new_snap["ledger"]:
             return None
@@ -2399,7 +2255,7 @@ class LakeTable:
         new_snap["version"] = self._alloc_slot(base_version)
         new_snap["parent"] = base_version
         # commit kind (Iceberg snapshot `operation` analog): lets readers
-        # distinguish logical changes (merge / merge-cow) from physical
+        # distinguish logical changes (merge / overwrite) from physical
         # reorganizations (compact / vacuum / schema-update) — change_log()
         # relies on this to skip reorganizations instead of refusing them
         new_snap["operation"] = operation
@@ -2423,7 +2279,6 @@ class LakeTable:
             attempt_manifests.append(name)
             new_snap["manifests"] = [name]
             new_snap["files"] = {}
-            self._manifest_cache.pop(new_snap["version"], None)
         if stats.per_bucket and not append:
             bucket_stats = dict(new_snap.get("bucket_stats", {}))
             for b, p in stats.per_bucket.items():
@@ -2463,22 +2318,19 @@ class LakeTable:
                 new_snap["ledger_floor"] = max(
                     new_snap.get("ledger_floor", -1), floor
                 )
+        # a lost slot CAS or pointer swap leaves this attempt's files
+        # unreferenced forever — unlink them before the caller rebases
+        mine = [os.path.join(self._meta_dir, n) for n in attempt_manifests]
         try:
             self._write_snapshot(new_snap)
-        except ConcurrentCommitError as e:
-            # lost the CAS: this attempt's manifest files will never be
-            # referenced — unlink them so metadata doesn't accrete orphans
-            for name in attempt_manifests:
+            mine.append(os.path.join(self._meta_dir, f"v{new_snap['version']}.json"))
+            self._swap_pointer(expected=base_version, new_version=new_snap["version"])
+        except ConcurrentCommitError:
+            for path in mine:
                 try:
-                    os.unlink(os.path.join(self._meta_dir, name))
+                    os.unlink(path)
                 except OSError:
                     pass
-            e.attempt_version = new_snap["version"]
-            raise
-        try:
-            self._swap_pointer(expected=base_version, new_version=new_snap["version"])
-        except ConcurrentCommitError as e:
-            e.attempt_version = new_snap["version"]
             raise
         stats.committed_version = new_snap["version"]
         return stats
@@ -2531,110 +2383,115 @@ class LakeTable:
     def stats(self) -> dict:
         return dict(self._snapshot()["stats"])
 
+    def _chain(
+        self, v: int | None, limit: int | None = None, stop: int | None = None
+    ) -> list[int]:
+        """Versions on ``v``'s parent chain, newest first: the first
+        ``limit`` of them, or down to and including ``stop``. Ends early
+        where expired metadata cuts the chain."""
+        out: list[int] = []
+        while v is not None and (limit is None or len(out) < limit):
+            out.append(v)
+            if v == stop:
+                break
+            try:
+                v = self._snapshot(v).get("parent")
+            except FileNotFoundError:
+                break
+        return out
+
     def expire_snapshots(
         self, keep_last: int = 10, orphan_grace_s: float | None = None
     ) -> dict:
-        """Snapshot GC (Iceberg's ``expireSnapshots`` analog): drop snapshot
-        metadata older than the ``keep_last`` most recent versions and delete
-        every data file no retained snapshot references — including orphan
-        commit directories left by crashes before the pointer swap.
+        """Snapshot GC (Iceberg's ``expireSnapshots`` analog). Retention
+        follows ``parent`` pointers, never version ranges (slot numbers
+        interleave across lineages):
 
-        Without this, a 10^10-event stream accrues unbounded metadata and
-        dead delta/base files (every compaction strands its inputs).
-        Idempotent (re-running deletes nothing new). Time travel afterwards
-        reaches only retained versions.
+        - every head (main and each branch) keeps the last ``keep_last``
+          commits on its own chain, metadata and data files;
+        - tags stay pinned until ``drop_tag``;
+        - each live branch keeps its staged segment down to and including
+          its fork with main, in full, so ``publish(mode='rebase')`` and a
+          reject can replay or retract it however long it stages;
+        - main's side of each divergence, back to the fork, keeps only its
+          snapshot JSON — :meth:`_common_ancestor` reads nothing else there.
+
+        Every snapshot file in none of those sets is deleted (a dropped
+        branch's lineage, a crashed writer's orphan slot), then every
+        manifest and data file no fully retained snapshot references —
+        including orphan commit directories left by crashes before the
+        pointer swap. Without this, a 10^10-event stream accrues unbounded
+        metadata and dead delta/base files (every compaction strands its
+        inputs). Idempotent (re-running deletes nothing new).
 
         **Concurrent writers** (``commit_retries``): a writer mid-commit has
-        written its data files but not yet won the snapshot CAS — those files
-        are unreferenced by every snapshot and default GC would delete them
-        out from under the commit. Either quiesce writers around GC, or pass
+        written its data files, manifest and snapshot file but not yet moved
+        its head — all unreferenced, so default GC would delete them out
+        from under the commit. Either quiesce writers around GC, or pass
         ``orphan_grace_s``: unreferenced files younger than the grace window
         (by mtime) are spared, exactly Iceberg's ``remove_orphan_files
         (older_than=...)`` contract — size it well beyond the longest
         in-flight commit (e.g. 3600). The grace check is maintenance-only
-        wall-clock; table state and replay stay deterministic.
-        Returns {files_deleted, bytes_deleted, snapshots_expired, dirs_removed}.
+        wall-clock; table state and replay stay deterministic. Returns
+        {files_deleted, bytes_deleted, snapshots_expired, dirs_removed,
+        manifests_deleted}.
         """
         cutoff = None if orphan_grace_s is None else time.time() - orphan_grace_s
-        current = self.current_version()
+
+        def collectable(path: str) -> bool:  # outside the grace window
+            return cutoff is None or os.path.getmtime(path) <= cutoff
+
         with open(os.path.join(self._meta_dir, "CURRENT")) as f:
             main_cur = int(f.read().strip())
         branch_heads = set(self.branches().values())
-        # EVERY live pointer is pinned, and EVERY head keeps its own
-        # keep_last window (Iceberg ref-retention semantics): with global
-        # slot allocation the lineages' version numbers interleave and
-        # diverge, so a single range scan off one head would miss — and GC —
-        # data files that only the OTHER lineage's recent snapshots
-        # reference (e.g. running GC from a branch handle whose head is far
-        # below main's). Tags pin until drop_tag; branch heads until
-        # drop_branch.
-        heads = {current, main_cur} | branch_heads
-        tagged = set(self.tags().values()) | heads
-        retain = set(tagged)
-        for h in heads:
-            retain |= set(range(max(0, h - keep_last + 1), h + 1))
-        # staged segments: each branch head's chain down to its fork with
-        # main — publish(mode='rebase') and reject walk exactly these
-        # snapshots, so their metadata (and files) must survive however
-        # long the branch stages; bounded by staging depth, gone with
-        # drop_branch
+        retain = set(self.tags().values())
+        for h in {self.current_version(), main_cur} | branch_heads:
+            retain.update(self._chain(h, limit=max(1, keep_last)))
+        meta_only: set[int] = set()
         for h in branch_heads:
             try:
                 fork = self._common_ancestor(main_cur, h)
-                v: int | None = h
-                while v is not None and v > fork:
-                    retain.add(v)
-                    v = self._snapshot(v).get("parent")
-            except (ValueError, FileNotFoundError):
-                pass  # staging history already damaged: publish fails loud
-        keep_from = min(max(0, h - keep_last + 1) for h in heads)
+            except ValueError:
+                continue  # staging history already damaged: publish fails loud
+            retain.update(self._chain(h, stop=fork))
+            meta_only.update(self._chain(main_cur, stop=fork))
         referenced: set[str] = set()
         live_manifests: set[str] = set()
-        retained = 0
-        for v in sorted(retain):
-            try:
+        for v in retain:
+            try:  # a pin on an already-expired (or metadata-only) snapshot
                 snap = self._snapshot(v)
+                resolved = self._resolve_files(snap)
             except FileNotFoundError:
                 continue
-            retained += 1
             live_manifests.update(snap.get("manifests", []))
-            for files in self._resolve_files(snap).values():
-                for fe in files:
-                    referenced.add(os.path.normpath(fe["path"]))
+            for files in resolved.values():
+                referenced.update(os.path.normpath(fe["path"]) for fe in files)
         stats = {"files_deleted": 0, "bytes_deleted": 0, "snapshots_expired": 0, "dirs_removed": 0, "manifests_deleted": 0}
         # data files no retained snapshot references (incl. crash orphans)
         for dirpath, _dirnames, filenames in os.walk(self._data_dir, topdown=False):
             for fn in filenames:
                 fp = os.path.join(dirpath, fn)
                 rel = os.path.normpath(os.path.relpath(fp, self.root))
-                if rel not in referenced:
-                    if cutoff is not None and os.path.getmtime(fp) > cutoff:
-                        continue  # inside the grace window: may be in-flight
+                if rel not in referenced and collectable(fp):
                     stats["bytes_deleted"] += os.path.getsize(fp)
                     os.remove(fp)
                     stats["files_deleted"] += 1
             if not os.listdir(dirpath) and os.path.normpath(dirpath) != os.path.normpath(self._data_dir):
                 os.rmdir(dirpath)
                 stats["dirs_removed"] += 1
-        # expired snapshot metadata (ref-pinned / staged versions stay
-        # readable; keep_from is the MINIMUM of every head's window)
-        for v in range(0, keep_from):
-            if v in retain:
-                continue
+        # snapshot files on no retained chain (incl. orphan slots)
+        for v in self._snapshot_versions() - retain - meta_only:
             p = os.path.join(self._meta_dir, f"v{v}.json")
-            if os.path.exists(p):
+            if collectable(p):
                 os.remove(p)
                 stats["snapshots_expired"] += 1
-        # manifest files no retained snapshot references (an in-flight
-        # commit's manifest lands on disk BEFORE its snapshot CAS — the
-        # grace window covers it exactly like its data files)
+        # manifests no fully retained snapshot references
         for fn in os.listdir(self._meta_dir):
             if fn.startswith("m") and fn.endswith(".json") and fn not in live_manifests:
                 mp = os.path.join(self._meta_dir, fn)
-                if cutoff is not None and os.path.getmtime(mp) > cutoff:
-                    continue
-                os.remove(mp)
-                stats["manifests_deleted"] += 1
+                if collectable(mp):
+                    os.remove(mp)
+                    stats["manifests_deleted"] += 1
         return stats
 
     def update_schema(self, new_schema: T.StructType, batch_id: int | str = "schema-update") -> MergeStats:

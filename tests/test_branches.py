@@ -183,6 +183,23 @@ def test_expire_pins_branch_head_until_drop(spark, tmp_root):
     )
 
 
+def test_slot_reused_after_gc_reads_its_own_files(spark, tmp_root):
+    """GC deletes a dropped branch's head even when it holds the highest
+    slot, so main's next commit reuses that number. A handle that cached
+    the branch snapshot's file list must not serve it for main's commit."""
+    t = _mk(spark, tmp_root)
+    t.create_branch("audit")
+    b = t.branch("audit")  # shares t's manifest cache
+    b.merge(_batch(spark, [("u3", 3, "I", "c")]), "b1")
+    assert b.read().count() == 3
+    bhead = b.current_version()
+    t.drop_branch("audit")
+    t.expire_snapshots(keep_last=3)
+    st = t.merge(_batch(spark, [("u4", 4, "I", "d")]), "m1")
+    assert st.committed_version == bhead
+    assert {r.url for r in t.read().collect()} == {"u1", "u2", "u4"}
+
+
 def test_expire_from_branch_handle_pins_main_head(spark, tmp_root):
     """GC run through a branch handle whose head is far ahead of main must
     never expire the snapshot main's CURRENT points at."""
@@ -234,6 +251,54 @@ def test_staged_segment_survives_gc_and_publishes(spark, tmp_root):
     assert {"s1", "s2"} <= urls and len(urls) == 2 + 12 + 2
 
 
+def test_long_staging_branch_publishes_after_gc(spark, tmp_root):
+    """A branch staging more than keep_last commits keeps its whole staged
+    segment AND the fork snapshot through GC, so a rebase publish still
+    replays every staged batch after main has moved on."""
+    t = _mk(spark, tmp_root)
+    t.create_branch("staging")
+    b = t.branch("staging")
+    for i in range(4):
+        b.merge(_batch(spark, [(f"s{i}", 200 + i, "I", "s")]), f"s{i}")
+    for i in range(6):
+        t.merge(_batch(spark, [(f"m{i}", 100 + i, "I", "m")]), f"mb{i}")
+    t.expire_snapshots(keep_last=3)
+    t.publish("staging", mode="rebase")
+    assert {r.url for r in t.read().collect()} == {"u1", "u2"} | {
+        f"s{i}" for i in range(4)
+    } | {f"m{i}" for i in range(6)}
+    ledger = t.ledger()
+    assert all(f"s{i}" in ledger for i in range(4))
+
+
+def test_gc_keeps_each_heads_last_commits_across_interleaved_lineages(
+    spark, tmp_root
+):
+    """Retention counts commits on each head's own parent chain, not slot
+    numbers: with three branch commits after every main commit, both heads
+    still read their last keep_last commits after GC."""
+    t = _mk(spark, tmp_root, compact_threshold=100)
+    t.create_branch("noise")
+    nb = t.branch("noise")
+    main_vs, branch_vs = [], []
+    for i in range(4):
+        st = t.merge(_batch(spark, [(f"m{i}", 100 + i, "I", "m")]), f"mb{i}")
+        main_vs.append(st.committed_version)
+        for j in range(3):
+            st = nb.merge(
+                _batch(spark, [(f"n{i}{j}", 200 + 10 * i + j, "I", "n")]),
+                f"nb{i}{j}",
+            )
+            branch_vs.append(st.committed_version)
+    t.expire_snapshots(keep_last=3)
+    assert [h["version"] for h in t.history()][-3:] == main_vs[-3:]
+    assert [h["version"] for h in nb.history()][-3:] == branch_vs[-3:]
+    for k in range(1, 4):  # main at its k-th commit: u1, u2, m0..mk
+        assert t.read(version=main_vs[k]).count() == 3 + k
+    for k in range(9, 12):  # branch at its k-th commit: u1, u2, n..
+        assert nb.read(version=branch_vs[k]).count() == 3 + k
+
+
 def test_ledger_window_counts_lineage_commits_not_slots(spark, tmp_root):
     """ledger_keep counts commits on THIS lineage: interleaved branch
     commits burn global slot numbers but must not shrink main's
@@ -263,25 +328,31 @@ def test_tmp_pattern_ref_names_rejected(spark, tmp_root):
         t.create_branch("v1.tmp-rc")
 
 
-def test_crashed_writer_semantics_unchanged_without_branches(spark, tmp_root):
-    """The linear-table crashed-writer refusal (pinned in test_concurrency)
-    must be untouched by branch support: no sentinel → slot is base+1 and a
-    taken slot with an unmoved pointer fails loud."""
+@pytest.mark.parametrize("with_branch", [False, True])
+def test_orphan_slot_skipped_with_or_without_branches(spark, tmp_root, with_branch):
+    """One slot rule for every table: a crashed writer's orphan snapshot
+    file (its pointer never moved) is skipped — the commit lands at v+2 —
+    and the next expire_snapshots deletes it, whether or not the table
+    has ever had a branch."""
     t = _mk(spark, tmp_root)
-    t.commit_grace_s = 0.1
+    if with_branch:
+        t.create_branch("audit")
     v = t.current_version()
     orphan = os.path.join(t._meta_dir, f"v{v + 1}.json")
     with open(orphan, "w") as f:
         f.write("{}")
-    with pytest.raises(ConcurrentCommitError, match="crashed"):
-        t.merge(_batch(spark, [("u9", 9, "I", "x")]), "bx")
-    os.unlink(orphan)
+    st = t.merge(_batch(spark, [("u9", 9, "I", "x")]), "bx")
+    assert st.committed_version == v + 2
+    assert {r.url for r in t.read().collect()} == {"u1", "u2", "u9"}
+    t.expire_snapshots()
+    assert not os.path.exists(orphan)
+    assert {r.url for r in t.read().collect()} == {"u1", "u2", "u9"}
 
 
 def test_branch_enabled_table_skips_foreign_slot(spark, tmp_root):
-    """Once branches exist, a taken slot that is NOT a head advance retries
-    with a re-scanned number instead of refusing (the slot belongs to
-    another lineage — exactly what interleaved commits produce)."""
+    """A taken slot that is NOT an advance of this head (it belongs to
+    another lineage — exactly what interleaved commits produce) is skipped:
+    the commit retries on a re-scanned number instead of refusing."""
     t = _mk(spark, tmp_root)
     t.create_branch("audit")
     v = t.current_version()
@@ -294,9 +365,9 @@ def test_branch_enabled_table_skips_foreign_slot(spark, tmp_root):
 
 
 def test_branch_slot_race_retries_with_rescan(spark, tmp_root, monkeypatch):
-    """A true slot race on a branch-enabled table (two writers computing the
-    same global slot): the CAS loser re-scans and lands on the next free
-    number — metadata-only retry, no refusal, no grace wait."""
+    """A true slot race (two writers computing the same global slot): the
+    CAS loser re-scans and lands on the next free number — a metadata-only
+    retry, no refusal."""
     t = _mk(spark, tmp_root)
     t.create_branch("audit")
     v = t.current_version()

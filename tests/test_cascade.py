@@ -215,7 +215,7 @@ def test_sync_refuses_cow_then_rebuild_recovers(spark, pair):
     c = Cascade(up, down)
     up.merge(_df(spark, [("I", "a", ts(1), 1, "en")]), 1)
     c.sync()
-    up.merge(_df(spark, [("U", "a", ts(2), 2, "fr")]), 2, strategy="cow")
+    up.overwrite(_df(spark, [("U", "a", ts(2), 2, "fr")]), 2)  # copy-on-write
     with pytest.raises(ChangeLogUnavailableError):
         c.sync()
     c.rebuild()

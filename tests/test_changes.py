@@ -117,13 +117,21 @@ def test_changes_spans_compaction_and_cow(spark, table):
     v1, _ = _seed(spark, table)
     table.compact()
     _merge(spark, table, [("U", "a", ts(4), 40, "it")], 4)
-    table.merge(
-        spark.createDataFrame([("U", "d", ts(5), 50, "nl")], SCHEMA),
+    # a fold-into-base (copy-on-write) commit: INSERT OVERWRITE with d
+    # updated and every other live row carried
+    table.overwrite(
+        spark.createDataFrame(
+            [
+                ("I", "a", ts(4), 40, "it"),
+                ("I", "c", ts(1), 3, "fr"),
+                ("U", "d", ts(5), 50, "nl"),
+            ],
+            SCHEMA,
+        ),
         batch_id=5,
-        strategy="cow",
     )
     got = {r.url: r._change_type for r in table.changes(v1).collect()}
-    # d didn't exist at v1 → its insert+cow-update nets to I
+    # d didn't exist at v1 → its insert+overwritten update nets to I
     assert got == {"a": "U", "b": "D", "d": "I"}
 
 
@@ -170,11 +178,8 @@ def test_change_log_range_slices(spark, table):
 
 def test_change_log_refuses_cow_range_but_changes_works(spark, table):
     v1, _ = _seed(spark, table)
-    table.merge(
-        spark.createDataFrame([("U", "d", ts(5), 50, "nl")], SCHEMA),
-        batch_id=5,
-        strategy="cow",
-    )
+    # a copy-on-write rewrite: backfill folds into fresh base files
+    table.backfill("lang", F.lit("nl"), batch_id=5)
     with pytest.raises(ChangeLogUnavailableError):
         table.change_log(v1)
     assert table.changes(v1).count() > 0  # snapshot diff always available

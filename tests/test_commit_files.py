@@ -160,3 +160,17 @@ def test_rewrite_job_budgets(spark, tmp_root):
     cas = Cascade(t, silver)
     _, n = _jobs(spark, "rebuild", cas.rebuild)
     assert n == 4
+
+
+def test_metadata_only_job_budgets(spark, tmp_root):
+    """A fast-forward publish moves one pointer and snapshot GC deletes
+    files found from metadata alone: 0 Spark jobs each."""
+    t = LakeTable.create(spark, os.path.join(tmp_root, "m"), n_buckets=4)
+    changes = change_stream(spark, n_events=400, n_keys=80, seed=3)
+    t.merge(changes.where(F.col("offset") < 200), "b0")
+    t.create_branch("staging")
+    t.branch("staging").merge(changes.where(F.col("offset") >= 200), "b1")
+    v, n = _jobs(spark, "publish_ff", lambda: t.publish("staging"))
+    assert v == t.current_version() and n == 0
+    st, n = _jobs(spark, "expire", lambda: t.expire_snapshots(keep_last=1))
+    assert st["snapshots_expired"] > 0 and n == 0

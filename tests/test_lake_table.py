@@ -383,55 +383,6 @@ def test_manifest_chain_squash(spark, tmp_root):
     assert {r.url for r in t.read().collect()} == {f"k{i}" for i in range(6)}
 
 
-def test_cow_merge_preserves_content_on_bump(spark, tmp_root):
-    """A winning seq-bump row (op='B', payload NULL) through the COPY-ON-
-    WRITE merge path must keep the stored payload and only advance the
-    sequence — never rewrite the bucket with the bump's NULLs."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_pipelines_spark.lake.table import LakeTable
-
-    t = LakeTable.create(spark, os.path.join(tmp_root, "cowbump"), n_buckets=2)
-    base = spark.createDataFrame(
-        [("U", "k1", 3, "payload-v3", "h3")],
-        "op string, url string, offset long, body string, content_hash string",
-    ).withColumn("warc_ts", F.timestamp_seconds(F.lit(1735689600) + F.col("offset")))
-    t.merge(base, batch_id=0, strategy="cow")
-
-    bump = spark.createDataFrame(
-        [("B", "k1", 9, None, "h3")],
-        "op string, url string, offset long, body string, content_hash string",
-    ).withColumn("warc_ts", F.timestamp_seconds(F.lit(1735689600) + F.col("offset")))
-    t.merge(bump, batch_id=1, strategy="cow")
-
-    rows = t.read().collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r.body == "payload-v3" and r.content_hash == "h3"
-    assert r.offset == 9  # sequence advanced by the bump
-
-    # a later out-of-order delete between 3 and 9 must lose (resurrection fix
-    # on the COW path too)
-    late_delete = spark.createDataFrame(
-        [("D", "k1", 7, None, None)],
-        "op string, url string, offset long, body string, content_hash string",
-    ).withColumn("warc_ts", F.timestamp_seconds(F.lit(1735689600) + F.col("offset")))
-    t.merge(late_delete, batch_id=2, strategy="cow")
-    rows = t.read().collect()
-    assert len(rows) == 1 and rows[0].body == "payload-v3" and rows[0].offset == 9
-
-    # a bump for a key with NO current row resolves to a tombstone, not a
-    # live NULL row
-    orphan = spark.createDataFrame(
-        [("B", "k2", 5, None, "hX")],
-        "op string, url string, offset long, body string, content_hash string",
-    ).withColumn("warc_ts", F.timestamp_seconds(F.lit(1735689600) + F.col("offset")))
-    t.merge(orphan, batch_id=3, strategy="cow")
-    assert t.read().where(F.col("url") == "k2").count() == 0
-
-
 def test_rollback_restores_state_and_reverts_ledger(spark, table):
     """RESTORE-style rollback: new commit, old content, history preserved;
     the ledger reverts so undone batches re-apply instead of being skipped;

@@ -1,8 +1,9 @@
 """Seeded lifecycle fuzz: random interleavings of merge / compact /
 sorted-compact / rebucket / vacuum / predicate DML (delete_where,
 update_where at random sequences — the LWW roulette) / branch
-write-audit-publish (stage→publish-or-reject, fast-forward or rebase)
-against a pure-python LWW model.
+write-audit-publish (stage→publish-or-reject, fast-forward or rebase) /
+snapshot GC (``expire_snapshots`` with a random window, also while a
+branch is staged) against a pure-python LWW model.
 
 The per-surface tests pin each operation alone; bugs hide in COMPOSITION
 (a rebucket between a delta merge and a sorted compact, a vacuum over a
@@ -108,7 +109,7 @@ def test_random_lifecycle_program_matches_model(spark, tmp_root, seed):
         actions.append(f"merge[{len(batch)}]")
 
         # one random maintenance action between merges
-        choice = rng.randrange(9)
+        choice = rng.randrange(10)
         bid += 1
         if choice == 0:
             table.compact(batch_id=f"c{bid}")
@@ -238,6 +239,9 @@ def test_random_lifecycle_program_matches_model(spark, tmp_root, seed):
                 ]
                 table.merge(spark.createDataFrame(ev_m, SCHEMA), batch_id=f"bm{bid}")
                 _model_apply(model, ev_m)
+            if rng.random() < 0.5:  # GC while staged: publish must survive
+                table.expire_snapshots(keep_last=rng.randint(1, 4))
+                actions.append("gc_staged")
             if rng.random() < 0.7:
                 table.publish(bname, mode="rebase")
                 _model_apply(model, staged)
@@ -245,6 +249,10 @@ def test_random_lifecycle_program_matches_model(spark, tmp_root, seed):
             else:
                 actions.append("wap_reject")
             table.drop_branch(bname)
+        elif choice == 9:
+            keep = rng.randint(1, 4)
+            table.expire_snapshots(keep_last=keep)
+            actions.append(f"gc{keep}")
 
         assert _table_live(table) == _model_live(model), actions
         # zone-map-exercising freshness read over whatever mixed layout

@@ -230,6 +230,21 @@ def test_bump_defeats_out_of_order_delete(spark, tmp_root):
     pipe.process_batch(batch([(11, "D", u, ts(11), None, None)]), 3)
     assert pipe.table.read().count() == 0
 
+    # a bump for a key with NO stored row cannot materialize: the
+    # merge-on-read resolution makes it a tombstone, never a live NULL row
+    orphan = "https://site.example.com/page/2"
+    pipe.table.merge(
+        spark.createDataFrame(
+            [(5, "B", orphan, ts(5), None, "0" * 64)],
+            "offset long, op string, url string, warc_ts timestamp, "
+            "html binary, content_hash string",
+        ),
+        batch_id="orphan-bump",
+    )
+    assert pipe.table.read().where(F.col("url") == orphan).count() == 0
+    dead = pipe.table.read(include_tombstones=True).where(F.col("url") == orphan)
+    assert [r._deleted for r in dead.collect()] == [True]
+
 
 def test_change_filter_with_mid_stream_schema_evolution(spark, tmp_root):
     """Bump deltas and additive schema evolution compose: the filtered
