@@ -59,7 +59,9 @@ Writable branches (Iceberg refs — the write-audit-publish primitive):
 ``create_branch`` forks a movable head into the same snapshot DAG;
 ``branch(name)`` returns a handle with the FULL table surface scoped to
 that head; ``fast_forward`` publishes by pointer swap (ancestry-checked,
-ledger rides with the snapshot so exactly-once crosses the publish).
+ledger rides with the snapshot so exactly-once crosses the publish). Each
+branch ref records its fork next to its head, so a rebase publish, a
+reject and retention find the staged segment without walking main.
 Version numbers on one lineage are monotone but not consecutive, so every
 chain walk (history, change_log, retention) follows ``parent`` pointers.
 """
@@ -67,6 +69,7 @@ chain walk (history, change_log, retention) follows ``parent`` pointers.
 from __future__ import annotations
 
 import base64
+import contextlib
 import fcntl
 import json
 import os
@@ -279,6 +282,7 @@ class LakeTable:
           metadata/v{N}.json                            # snapshot N
           metadata/m{N}-{uuid}.json                     # commit N's manifest
           metadata/CURRENT                              # atomic pointer
+          metadata/BRANCH-{name}                        # "<head> <fork>"
           metadata/LOCK                                 # flock per pointer swap
 
     Snapshot JSON: schema registry (``schemas``: schema_id → StructType
@@ -421,8 +425,23 @@ class LakeTable:
     MANIFEST_SQUASH = 64
 
     def current_version(self) -> int:
-        with open(os.path.join(self._meta_dir, self._pointer)) as f:
-            return int(f.read().strip())
+        return self._read_ref(self._pointer)[0]
+
+    def _read_ref(self, fn: str) -> tuple[int, int | None]:
+        """``(head, fork)`` of a pointer file: ``CURRENT`` holds a head, a
+        branch ref ``"<head> <fork>"`` (see :meth:`create_branch`)."""
+        with open(os.path.join(self._meta_dir, fn)) as f:
+            parts = f.read().split()
+        return int(parts[0]), (int(parts[1]) if len(parts) > 1 else None)
+
+    def _write_ref(self, fn: str, head: int, fork: int | None) -> None:
+        path = os.path.join(self._meta_dir, fn)
+        tmp = path + f".tmp-{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            f.write(str(head) if fork is None else f"{head} {fork}")
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
 
     # ------------------------------------------------------------- manifests
     #
@@ -593,15 +612,18 @@ class LakeTable:
 
     def branches(self) -> dict[str, int]:
         """Writable branch refs: name → head snapshot version."""
-        out: dict[str, int] = {}
+        return {n: head for n, (head, _) in self._branch_refs().items()}
+
+    def _branch_refs(self) -> dict[str, tuple[int, int | None]]:
+        """Branch name → ``(head, fork)``."""
+        out: dict[str, tuple[int, int | None]] = {}
         if not os.path.isdir(self._meta_dir):
             return out
         for fn in os.listdir(self._meta_dir):
             if fn.startswith(self._BRANCH_PREFIX) and not fn.endswith(".tmp") \
                     and ".tmp-" not in fn:
                 try:
-                    with open(os.path.join(self._meta_dir, fn)) as f:
-                        out[fn[len(self._BRANCH_PREFIX):]] = int(f.read().strip())
+                    out[fn[len(self._BRANCH_PREFIX):]] = self._read_ref(fn)
                 except FileNotFoundError:
                     # dropped between listdir and open (concurrent
                     # drop_branch / reject) — a consistent after-view
@@ -612,7 +634,14 @@ class LakeTable:
         """Fork a writable branch at ``version`` (default: this handle's
         head). Exclusive-create: re-creating an existing branch at the SAME
         head is an idempotent no-op (pipeline restart); at a different
-        version it refuses. Returns the branch's head version."""
+        version it refuses. Returns the branch's head version.
+
+        The ref records its **fork** next to its head: the newest commit
+        the branch shares with main. It starts at ``version`` and moves up
+        to the published head when main fast-forwards to the branch, so
+        ``publish(mode='rebase')``, a reject and snapshot retention find
+        the staged segment (head down to fork) on the branch's own chain
+        without walking main's history."""
         self._check_ref_name(name)
         if name in self.tags():
             raise ValueError(f"{name!r} is already a tag (refs share a namespace)")
@@ -625,14 +654,13 @@ class LakeTable:
         path = self._branch_file(name)
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            f.write(str(v))
+            f.write(f"{v} {v}")
             f.flush()
             os.fsync(f.fileno())
         try:
             os.link(tmp, path)
         except FileExistsError:
-            with open(path) as f:
-                head = int(f.read().strip())
+            head = self._read_ref(os.path.basename(path))[0]
             if head != v:
                 raise ValueError(
                     f"branch {name!r} already exists at v{head} "
@@ -646,11 +674,10 @@ class LakeTable:
         """Remove a branch ref; its snapshots lose their pin (metadata and
         files become expirable by :meth:`expire_snapshots` where no other
         ref retains them). Returns the head version it pointed at."""
-        path = self._branch_file(name)
         try:
-            with open(path) as f:
-                head = int(f.read().strip())
-            os.unlink(path)
+            with self._lock():  # never between a publish's read and rewrite
+                head = self._read_ref(self._BRANCH_PREFIX + name)[0]
+                os.unlink(self._branch_file(name))
         except FileNotFoundError:  # also covers a concurrent drop's unlink
             raise KeyError(f"unknown branch {name!r}") from None
         return head
@@ -658,7 +685,9 @@ class LakeTable:
     def branch(self, name: str) -> "LakeTable":
         """A full table handle scoped to ``name``: reads resolve at the
         branch head, commits CAS the branch pointer. Shares the manifest
-        cache with this handle (safe: slots are globally unique)."""
+        cache with this handle (safe: :meth:`_resolve_files` keys it by
+        version AND manifest chain, so a slot number reused after GC never
+        serves another snapshot's files)."""
         import copy as _copy
 
         if name not in self.branches():
@@ -703,30 +732,11 @@ class LakeTable:
                 "mode='rebase') replays the staged batches, or fork a new "
                 "branch from the current head and re-stage)"
             )
-        self._swap_pointer(expected=cur, new_version=head)
+        self._swap_pointer(
+            expected=cur, new_version=head,
+            publish=name if self._branch_name is None else None,
+        )
         return head
-
-    def _common_ancestor(self, a: int, b: int) -> int:
-        """Fork point of two lineages. Lockstep walk — always step the
-        HIGHER version down (parents are strictly smaller), so only
-        snapshots at or above the fork are ever opened: O(divergence), and
-        immune to ``expire_snapshots`` having trimmed history below the
-        fork (walking to v0 would crash on any long-lived table)."""
-        try:
-            while a != b:
-                if a > b:
-                    a = self._snapshot(a).get("parent")
-                else:
-                    b = self._snapshot(b).get("parent")
-                if a is None or b is None:
-                    raise ValueError("lineages share no ancestor")
-        except FileNotFoundError as e:
-            raise ValueError(
-                "cannot locate the fork point: snapshot metadata on the "
-                "divergence path was expired (expire_snapshots ran while "
-                "the branch was staged) — re-stage on a fresh branch"
-            ) from e
-        return a
 
     def publish(self, name: str, mode: str = "ff") -> int:
         """Publish branch ``name`` into this handle's head.
@@ -734,8 +744,9 @@ class LakeTable:
         ``mode='ff'`` is :meth:`fast_forward` (atomic pointer swap; refuses
         on divergence). ``mode='rebase'`` also handles divergence — the
         Iceberg WAP cherry-pick analog: the branch's staged MERGE commits
-        since the fork point are replayed onto the current head as fresh
-        commits, **reusing their original batch ids**, so each replay is
+        since its recorded fork (see :meth:`create_branch`) are replayed
+        onto the current head as fresh commits, **reusing their original
+        batch ids**, so each replay is
         exactly-once against this head's ledger (a batch that already
         landed here — a previous partial publish, or a commit shared via an
         earlier fast-forward — skips). Sound because LWW delta merges
@@ -758,30 +769,23 @@ class LakeTable:
             return self.fast_forward(name)
         if mode != "rebase":
             raise ValueError(f"unknown publish mode {mode!r}")
-        heads = self.branches()
-        if name not in heads:
+        refs = self._branch_refs()
+        if name not in refs:
             raise KeyError(f"unknown branch {name!r}")
-        head = heads[name]
+        head, fork = refs[name]
         cur = self.current_version()
         if head == cur or self.is_ancestor(cur, head):
             return self.fast_forward(name)
         b = self.branch(name)
-        fork = self._common_ancestor(cur, head)
-        chain: list[dict] = []
-        v: int | None = head
-        while v != fork:
-            try:
-                s = self._snapshot(v)
-            except FileNotFoundError as e:
-                raise ConcurrentCommitError(
-                    f"staged snapshot v{v} was expired while branch "
-                    f"{name!r} awaited publish — re-stage on a fresh "
-                    "branch (expire_snapshots retains staged segments "
-                    "of LIVE branches; this one was trimmed earlier)"
-                ) from e
-            chain.append(s)
-            v = s.get("parent")
-        for s in reversed(chain):
+        chain = self._chain(head, stop=fork)
+        if not chain or chain[-1]["version"] != fork:
+            raise ConcurrentCommitError(
+                f"staged snapshots of branch {name!r} between v{fork} and "
+                f"v{head} were expired — re-stage on a fresh branch "
+                "(expire_snapshots retains the staged segment of a LIVE "
+                "branch; this one was trimmed earlier)"
+            )
+        for s in reversed(chain[:-1]):
             op = s.get("operation")
             sv = s["version"]
             batches = [bi for bi, ver in s["ledger"].items() if ver == sv]
@@ -829,30 +833,39 @@ class LakeTable:
         finally:
             os.unlink(tmp)
 
-    def _swap_pointer(self, expected: int | None, new_version: int) -> None:
-        """Atomic last-step commit: move this handle's head pointer to
-        ``new_version``, refusing if it no longer points at ``expected``.
-
-        The check and the tmp-write + rename run under an exclusive
-        ``flock`` on ``metadata/LOCK``, so no other writer (another process,
-        or another handle in this one — each ``open`` is its own lock) can
-        move any head between them. The kernel releases the lock when the
-        holder dies."""
-        cur_path = os.path.join(self._meta_dir, self._pointer)
+    @contextlib.contextmanager
+    def _lock(self):
+        """Exclusive ``flock`` on ``metadata/LOCK``. Each ``open`` is its
+        own lock, so two handles in one process exclude each other too; the
+        kernel releases it when the holder dies."""
         with open(os.path.join(self._meta_dir, "LOCK"), "a") as lock:
             fcntl.flock(lock, fcntl.LOCK_EX)
+            yield
+
+    def _swap_pointer(
+        self, expected: int | None, new_version: int, publish: str | None = None
+    ) -> None:
+        """Atomic last-step commit: move this handle's head pointer to
+        ``new_version``, refusing if it no longer points at ``expected``.
+        The check and the tmp-write + rename run under :meth:`_lock`, so no
+        other writer can move any head between them. A branch ref keeps its
+        fork; ``publish`` names a branch whose fork moves up to
+        ``new_version`` because main now holds it (a fast-forward)."""
+        with self._lock():
             if expected is not None:
                 actual = self.current_version()
                 if actual != expected:
                     raise ConcurrentCommitError(
                         f"expected snapshot v{expected}, found v{actual}"
                     )
-            tmp = cur_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                f.write(str(new_version))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, cur_path)
+            fork = self._read_ref(self._pointer)[1] if self._branch_name else None
+            self._write_ref(self._pointer, new_version, fork)
+            if publish is not None:
+                ref = self._BRANCH_PREFIX + publish
+                try:
+                    self._write_ref(ref, self._read_ref(ref)[0], new_version)
+                except FileNotFoundError:
+                    pass  # dropped before the lock: nothing left to track
 
     def _snapshot_versions(self) -> set[int]:
         """Versions of every snapshot file on disk, on any lineage."""
@@ -2385,19 +2398,20 @@ class LakeTable:
 
     def _chain(
         self, v: int | None, limit: int | None = None, stop: int | None = None
-    ) -> list[int]:
-        """Versions on ``v``'s parent chain, newest first: the first
+    ) -> list[dict]:
+        """Snapshots on ``v``'s parent chain, newest first: the first
         ``limit`` of them, or down to and including ``stop``. Ends early
         where expired metadata cuts the chain."""
-        out: list[int] = []
+        out: list[dict] = []
         while v is not None and (limit is None or len(out) < limit):
-            out.append(v)
-            if v == stop:
-                break
             try:
-                v = self._snapshot(v).get("parent")
+                s = self._snapshot(v)
             except FileNotFoundError:
                 break
+            out.append(s)
+            if v == stop:
+                break
+            v = s.get("parent")
         return out
 
     def expire_snapshots(
@@ -2411,18 +2425,19 @@ class LakeTable:
           commits on its own chain, metadata and data files;
         - tags stay pinned until ``drop_tag``;
         - each live branch keeps its staged segment down to and including
-          its fork with main, in full, so ``publish(mode='rebase')`` and a
-          reject can replay or retract it however long it stages;
-        - main's side of each divergence, back to the fork, keeps only its
-          snapshot JSON — :meth:`_common_ancestor` reads nothing else there.
+          its recorded fork (see :meth:`create_branch`), so
+          ``publish(mode='rebase')`` and a reject can replay or retract it
+          however long it stages.
 
-        Every snapshot file in none of those sets is deleted (a dropped
-        branch's lineage, a crashed writer's orphan slot), then every
-        manifest and data file no fully retained snapshot references —
-        including orphan commit directories left by crashes before the
-        pointer swap. Without this, a 10^10-event stream accrues unbounded
-        metadata and dead delta/base files (every compaction strands its
-        inputs). Idempotent (re-running deletes nothing new).
+        Every snapshot file in none of those sets is deleted (main's
+        history past its window, a dropped branch's lineage, a crashed
+        writer's orphan slot), then every manifest and data file no
+        surviving snapshot references — including orphan commit
+        directories left by crashes before the pointer swap. A snapshot
+        file that survives GC is therefore always fully readable. Without
+        this, a 10^10-event stream accrues unbounded metadata and dead
+        delta/base files (every compaction strands its inputs). Idempotent
+        (re-running deletes nothing new).
 
         **Concurrent writers** (``commit_retries``): a writer mid-commit has
         written its data files, manifest and snapshot file but not yet moved
@@ -2431,7 +2446,8 @@ class LakeTable:
         ``orphan_grace_s``: unreferenced files younger than the grace window
         (by mtime) are spared, exactly Iceberg's ``remove_orphan_files
         (older_than=...)`` contract — size it well beyond the longest
-        in-flight commit (e.g. 3600). The grace check is maintenance-only
+        in-flight commit (e.g. 3600). A snapshot file spared this way keeps
+        its manifests and data files too. The grace check is maintenance-only
         wall-clock; table state and replay stay deterministic. Returns
         {files_deleted, bytes_deleted, snapshots_expired, dirs_removed,
         manifests_deleted}.
@@ -2441,24 +2457,28 @@ class LakeTable:
         def collectable(path: str) -> bool:  # outside the grace window
             return cutoff is None or os.path.getmtime(path) <= cutoff
 
-        with open(os.path.join(self._meta_dir, "CURRENT")) as f:
-            main_cur = int(f.read().strip())
-        branch_heads = set(self.branches().values())
+        refs = self._branch_refs()
+        heads = {self.current_version(), self._read_ref("CURRENT")[0]}
         retain = set(self.tags().values())
-        for h in {self.current_version(), main_cur} | branch_heads:
-            retain.update(self._chain(h, limit=max(1, keep_last)))
-        meta_only: set[int] = set()
-        for h in branch_heads:
-            try:
-                fork = self._common_ancestor(main_cur, h)
-            except ValueError:
-                continue  # staging history already damaged: publish fails loud
-            retain.update(self._chain(h, stop=fork))
-            meta_only.update(self._chain(main_cur, stop=fork))
+        for h in heads | {h for h, _ in refs.values()}:
+            retain.update(s["version"] for s in self._chain(h, limit=max(1, keep_last)))
+        for h, fork in refs.values():
+            retain.update(s["version"] for s in self._chain(h, stop=fork))
+        stats = {"files_deleted": 0, "bytes_deleted": 0, "snapshots_expired": 0, "dirs_removed": 0, "manifests_deleted": 0}
+        # snapshot files on no retained chain (incl. orphan slots) go first:
+        # a crash after this step leaves only unreferenced files behind
+        survivors = set(retain)
+        for v in self._snapshot_versions() - retain:
+            p = os.path.join(self._meta_dir, f"v{v}.json")
+            if collectable(p):
+                os.remove(p)
+                stats["snapshots_expired"] += 1
+            else:
+                survivors.add(v)
         referenced: set[str] = set()
         live_manifests: set[str] = set()
-        for v in retain:
-            try:  # a pin on an already-expired (or metadata-only) snapshot
+        for v in survivors:
+            try:  # a pin on an already-expired snapshot
                 snap = self._snapshot(v)
                 resolved = self._resolve_files(snap)
             except FileNotFoundError:
@@ -2466,8 +2486,7 @@ class LakeTable:
             live_manifests.update(snap.get("manifests", []))
             for files in resolved.values():
                 referenced.update(os.path.normpath(fe["path"]) for fe in files)
-        stats = {"files_deleted": 0, "bytes_deleted": 0, "snapshots_expired": 0, "dirs_removed": 0, "manifests_deleted": 0}
-        # data files no retained snapshot references (incl. crash orphans)
+        # data files no surviving snapshot references (incl. crash orphans)
         for dirpath, _dirnames, filenames in os.walk(self._data_dir, topdown=False):
             for fn in filenames:
                 fp = os.path.join(dirpath, fn)
@@ -2479,13 +2498,7 @@ class LakeTable:
             if not os.listdir(dirpath) and os.path.normpath(dirpath) != os.path.normpath(self._data_dir):
                 os.rmdir(dirpath)
                 stats["dirs_removed"] += 1
-        # snapshot files on no retained chain (incl. orphan slots)
-        for v in self._snapshot_versions() - retain - meta_only:
-            p = os.path.join(self._meta_dir, f"v{v}.json")
-            if collectable(p):
-                os.remove(p)
-                stats["snapshots_expired"] += 1
-        # manifests no fully retained snapshot references
+        # manifests no surviving snapshot references
         for fn in os.listdir(self._meta_dir):
             if fn.startswith("m") and fn.endswith(".json") and fn not in live_manifests:
                 mp = os.path.join(self._meta_dir, fn)
@@ -2557,22 +2570,15 @@ class LakeTable:
         """Snapshot log (oldest→newest): version, parent, schema id, batch
         ids committed at that version, table stats — Iceberg's snapshot
         history analog, also the audit trail for replay verification."""
-        out = []
-        v: int | None = self.current_version()
-        while v is not None:
-            try:
-                s = self._snapshot(v)
-            except FileNotFoundError:
-                break  # older snapshots expired by expire_snapshots()
-            out.append(
-                {
-                    "version": s["version"],
-                    "parent": s["parent"],
-                    "operation": s.get("operation"),
-                    "schema_id": s["current_schema_id"],
-                    "batches": [b for b, ver in s["ledger"].items() if ver == s["version"]],
-                    "stats": dict(s.get("stats", {})),
-                }
-            )
-            v = s["parent"]
-        return list(reversed(out))
+        return [
+            {
+                "version": s["version"],
+                "parent": s["parent"],
+                "operation": s.get("operation"),
+                "schema_id": s["current_schema_id"],
+                "batches": [b for b, ver in s["ledger"].items() if ver == s["version"]],
+                "stats": dict(s.get("stats", {})),
+            }
+            # ends where expire_snapshots() removed older snapshots
+            for s in reversed(self._chain(self.current_version()))
+        ]

@@ -359,24 +359,18 @@ class CdcPipeline:
         if self.cfg.branch is None:
             raise ValueError("pipeline has no staging branch (cfg.branch)")
         name = self.cfg.branch
-        heads = self.main_table.branches()
-        if name not in heads:  # crash after a completed reject: re-fork only
+        refs = self.main_table._branch_refs()
+        if name not in refs:  # crash after a completed reject: re-fork only
             self.main_table.create_branch(name)
             self.table = self._branch_handle(name)
             return {"branch": name, "staged_commits": 0, "retracted": False}
-        head = heads[name]
-        cur = self.main_table.current_version()
-        fork = self.main_table._common_ancestor(cur, head)
-        staged_commits = 0
-        v = head
-        try:
-            while v != fork:
-                staged_commits += 1
-                v = self.main_table._snapshot(v)["parent"]
-        except FileNotFoundError:
-            staged_commits = -1  # partially expired staging metadata;
-            # the retraction below (change_log) will fail loud if it
-            # actually needs the missing snapshots
+        head, fork = refs[name]
+        chain = self.main_table._chain(head, stop=fork)
+        # -1: partially expired staging metadata; the retraction below
+        # (change_log) fails loud if it actually needs the missing snapshots
+        staged_commits = (
+            len(chain) - 1 if chain and chain[-1]["version"] == fork else -1
+        )
         retracted = False
         if self.near_dup is not None and head != fork:
             key = self.cfg.key

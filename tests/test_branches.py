@@ -271,6 +271,51 @@ def test_long_staging_branch_publishes_after_gc(spark, tmp_root):
     assert all(f"s{i}" in ledger for i in range(4))
 
 
+def test_rollback_to_expired_main_version_refuses_with_live_branch(
+    spark, tmp_root
+):
+    """A live branch must not keep main's pre-window snapshots as metadata
+    without data: after GC they are gone from history, and a rollback to
+    one refuses before anything changes."""
+    t = _mk(spark, tmp_root)
+    t.create_branch("staging")
+    t.branch("staging").merge(_batch(spark, [("s1", 201, "I", "s")]), "s1")
+    main_vs = [
+        t.merge(_batch(spark, [(f"m{i}", 100 + i, "I", "m")]), f"mb{i}").committed_version
+        for i in range(6)
+    ]
+    t.expire_snapshots(keep_last=3)
+    assert [h["version"] for h in t.history()] == main_vs[-3:]
+    head = t.current_version()
+    with pytest.raises(FileNotFoundError):
+        t.rollback(main_vs[1])
+    assert t.current_version() == head
+    assert t.read().count() == 2 + 6
+    t.publish("staging", mode="rebase")  # the staged segment is intact
+    assert t.read().count() == 2 + 6 + 1
+
+
+def test_fast_forward_moves_the_recorded_fork(spark, tmp_root):
+    """After main fast-forwards to a branch, the branch's fork is the
+    published head: GC stops pinning the published commits, and a later
+    rebase publish replays only what was staged after it."""
+    t = _mk(spark, tmp_root)
+    t.create_branch("staging")
+    b = t.branch("staging")
+    for i in range(4):
+        b.merge(_batch(spark, [(f"s{i}", 200 + i, "I", "s")]), f"s{i}")
+    first = b.history()[-4]["version"]
+    head = t.publish("staging")
+    assert t._branch_refs()["staging"] == (head, head)
+    b.merge(_batch(spark, [("s9", 209, "I", "s")]), "s9")
+    t.merge(_batch(spark, [("m0", 100, "I", "m")]), "mb0")
+    t.expire_snapshots(keep_last=1)
+    assert not os.path.exists(os.path.join(t._meta_dir, f"v{first}.json"))
+    t.publish("staging", mode="rebase")
+    assert t.read().count() == 2 + 4 + 1 + 1
+    assert "s9" in t.ledger()
+
+
 def test_gc_keeps_each_heads_last_commits_across_interleaved_lineages(
     spark, tmp_root
 ):
