@@ -394,12 +394,10 @@ class AggView:
             return False
         if bid in self._absorbed():
             return False
-        # the pre-image version is the commit's PARENT snapshot — on a
-        # branch-enabled table version slots are global, so arithmetic
-        # (post_v - 1) could name another lineage's snapshot entirely
-        pre_v = table._snapshot(post_v).get("parent")
-        if pre_v is None:
-            pre_v = post_v - 1  # legacy snapshot without a parent field
+        # the pre-image version is the commit's PARENT snapshot — version
+        # slots are global, so arithmetic (post_v - 1) could name another
+        # lineage's snapshot entirely
+        pre_v = table._snapshot(post_v)["parent"]
 
         key = table.key
         log = None
@@ -430,21 +428,19 @@ class AggView:
         # files are identical across the two versions), so those bucket ids
         # are a safe superset of the touched keys' buckets under BOTH
         # versions. Falls back to hashing the touched keys (bounded collect,
-        # ≤ n_buckets values, cached per layout) across layout changes or on
-        # legacy inline-files snapshots with no manifest diff.
+        # ≤ n_buckets values, cached per layout) across layout changes or
+        # when the commit added no manifest.
         nb_by_v = {
-            v: int(table._snapshot(v).get("n_buckets", table.n_buckets))
+            v: int(table._snapshot(v)["n_buckets"])
             for v in (pre_v, post_v)
-            if v >= 0 and os.path.exists(os.path.join(table._meta_dir, f"v{v}.json"))
+            if os.path.exists(os.path.join(table._meta_dir, f"v{v}.json"))
         }
         manifest_bkts: list[int] | None = None
         batch_has_bumps = True  # conservative until the manifest diff proves not
         if nb_by_v.get(pre_v) == nb_by_v.get(post_v) and pre_v in nb_by_v:
-            prior = set(table._snapshot(pre_v).get("manifests", []))
+            prior = set(table._snapshot(pre_v)["manifests"])
             new_manifests = [
-                m
-                for m in table._snapshot(post_v).get("manifests", [])
-                if m not in prior
+                m for m in table._snapshot(post_v)["manifests"] if m not in prior
             ]
             if new_manifests:
                 touched_b: set[int] = set()
@@ -458,7 +454,7 @@ class AggView:
         bkt_cache: dict[int, list[int]] = {}
 
         def bkts_for(v: int) -> list[int]:
-            nb = int(table._snapshot(v).get("n_buckets", table.n_buckets))
+            nb = int(table._snapshot(v)["n_buckets"])
             if manifest_bkts is not None and nb == nb_by_v.get(post_v):
                 return manifest_bkts
             if nb not in bkt_cache:

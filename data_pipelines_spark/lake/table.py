@@ -98,8 +98,7 @@ class ConcurrentCommitError(RuntimeError):
 class ChangeLogUnavailableError(RuntimeError):
     """change_log() cannot reconstruct row-level deltas for this version
     range (an overwrite / backfill / rollback folded them into rewritten
-    files, or a legacy commit lacks the operation tag). ``changes()`` always
-    works."""
+    files). ``changes()`` always works."""
 
 
 class SchemaEvolutionError(ValueError):
@@ -314,12 +313,6 @@ class LakeTable:
         #: worst-case read amplification is threshold + stagger - 1.
         self.compact_threshold = compact_threshold
         self.compact_stagger = max(1, compact_stagger)
-        #: auto-compaction layout policy: sort_by_seq keeps steady-state base
-        #: files seq-clustered (see :meth:`compact`) so incremental
-        #: ``read(min_seq_ts=...)`` consumers stay zone-map-pruned without a
-        #: separate OPTIMIZE pass; target rows bound each file's size
-        self.compact_sort_by_seq = False
-        self.compact_target_file_rows: int | None = None
         #: exactly-once ledger retention: keep entries for the last N commits
         #: only (None = unbounded). The ledger rides inside every snapshot
         #: JSON, so without retention a 10^6-microbatch stream makes every
@@ -398,7 +391,6 @@ class LakeTable:
             "n_buckets": n_buckets,
             "current_schema_id": None,
             "schemas": {},
-            "files": {},
             "manifests": [],
             "ledger": {},
             "bucket_stats": {},
@@ -449,8 +441,7 @@ class LakeTable:
     # (metadata/m{version}-{uuid}.json), not in the snapshot JSON — a commit
     # writes O(files changed in this commit) metadata, so commit cost stops
     # growing with table size (the Iceberg snapshot → manifest shape).
-    # Snapshot JSON carries only the ordered manifest path list (plus a
-    # legacy inline "files" dict as the chain base for old snapshots).
+    # Snapshot JSON carries only the ordered manifest path list.
 
     def _write_manifest(self, version: int, append: bool, files: dict) -> str:
         name = f"m{version}-{uuid.uuid4().hex[:8]}.json"
@@ -468,21 +459,19 @@ class LakeTable:
             return json.load(f)
 
     def _resolve_files(self, snap: dict) -> dict[str, list[dict]]:
-        """Materialize the per-bucket file lists for a snapshot: legacy
-        inline ``files`` as the base, then the manifest chain in order
-        (append extends a bucket's list; replace resets every bucket the
-        manifest mentions). Cached per (version, manifest chain) —
-        manifests are immutable and their names unique, so a cache entry can
-        never outlive its snapshot file (a lost commit attempt, or a slot
-        number reused after GC deleted the highest snapshot)."""
-        ck = (snap["version"], tuple(snap.get("manifests", [])))
+        """Materialize the per-bucket file lists for a snapshot from its
+        manifest chain, in order (append extends a bucket's list; replace
+        resets every bucket the manifest mentions). Cached per (version,
+        manifest chain) — manifests are immutable and their names unique, so
+        a cache entry can never outlive its snapshot file (a lost commit
+        attempt, or a slot number reused after GC deleted the highest
+        snapshot)."""
+        ck = (snap["version"], tuple(snap["manifests"]))
         cached = self._manifest_cache.get(ck)
         if cached is not None:
             return cached
-        files: dict[str, list[dict]] = {
-            b: list(fl) for b, fl in snap.get("files", {}).items()
-        }
-        for name in snap.get("manifests", []):
+        files: dict[str, list[dict]] = {}
+        for name in snap["manifests"]:
             m = self._load_manifest(name)
             for b, fl in m["files"].items():
                 if m["append"]:
@@ -1049,8 +1038,7 @@ class LakeTable:
                     fe, key_filter
                 ):
                     continue
-                kind = fe.get("kind", "base")
-                groups.setdefault((fe["schema_id"], kind), []).append(
+                groups.setdefault((fe["schema_id"], fe["kind"]), []).append(
                     os.path.join(self.root, fe["path"])
                 )
         out_schema = self._phys_schema(target, "base")
@@ -1145,8 +1133,8 @@ class LakeTable:
 
         Each key's bucket is ``pmod(xxhash64(key), n_buckets)`` under the
         requested version's OWN layout (rebucket changes ``n_buckets``
-        per-snapshot), computed with one tiny local job bounded by
-        ``len(keys)`` rows — no shuffle, no table scan. The snapshot read is
+        per-snapshot), folded by Spark while planning over a local relation
+        of the keys — no Spark job, no table scan. The snapshot read is
         then pruned to those bucket directories only, and the ``key IN
         (...)`` predicate is applied under the LWW resolution: it references
         only the grouping key, so Catalyst pushes it through the aggregate
@@ -1186,18 +1174,21 @@ class LakeTable:
                 version=version, buckets=[], columns=columns,
                 include_tombstones=include_tombstones,
             )
-        n = int(snap.get("n_buckets", self.n_buckets))
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        n = int(snap["n_buckets"])
         key_field = next(f for f in target.fields if f.name == self.key)
+        # an Arrow-built frame is a local relation, so Spark evaluates the
+        # bucket projection while planning and the collect runs no job (a
+        # Python list would be a Python-RDD job, .distinct() an aggregate
+        # job). The keys carry the key field's type: xxhash64 of an int
+        # differs from that of a long.
         kdf = self.spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([key_field])
+            pa.table({self.key: pa.array(keys, type=to_arrow_type(key_field.dataType))}),
+            T.StructType([key_field]),
         )
-        # bounded collect: ≤ len(keys) bucket ids from a single local stage
-        bks = sorted(
-            r[0]
-            for r in kdf.select(
-                bucket_id(F.col(self.key), n).alias("b")
-            ).distinct().collect()
-        )
+        bks = sorted({r[0] for r in kdf.select(bucket_id(F.col(self.key), n)).collect()})
         df = self.read(
             version=version, buckets=bks, columns=columns,
             include_tombstones=include_tombstones, key_filter=keys,
@@ -1350,15 +1341,10 @@ class LakeTable:
                     f"v{v} is an INSERT OVERWRITE; the whole state was "
                     "replaced with no delta rows — use changes()"
                 )
-            else:  # legacy snapshot without an operation tag: infer
-                if (prev_paths - cur_paths) or any(
-                    fe.get("kind", "base") != "delta" for fe in new
-                ):
-                    raise ChangeLogUnavailableError(
-                        f"v{v} predates commit-operation tagging and is not "
-                        "a pure delta append — use changes()"
-                    )
-                added.extend((v, fe) for fe in new)
+            else:
+                raise ChangeLogUnavailableError(
+                    f"v{v} has unknown commit operation {op!r} — use changes()"
+                )
             prev_paths = cur_paths
         if not added or final_schema is None:
             return self.spark.createDataFrame([], T.StructType(out_fields))
@@ -1431,9 +1417,10 @@ class LakeTable:
         # bucket, then groupBy (bucket, key) — bucket = f(key), so same-key
         # rows are already co-located and Catalyst adds no second exchange
         # (HashPartitioning(_bucket) satisfies ClusteredDistribution(_bucket,
-        # key)). max_by still pre-aggregates map-side (combiner), so a hot key
-        # is partially reduced before the shuffle — skew-proof without a
-        # row_number window.
+        # key)). The partial max_by runs AFTER the explicit repartition (the
+        # plan is Exchange → partial_max_by), so every duplicate delivery
+        # crosses the shuffle with its payload and a hot key lands whole in
+        # one task: salt_dedup below is the only hot-key pre-reduction.
         batch_cols = [f.name for f in batch_df.schema.fields]
         width = max(1, min(self.n_buckets, 256))
         payload = F.struct(*[c for c in batch_cols if c != self.key])
@@ -1499,17 +1486,12 @@ class LakeTable:
         over = [
             int(b)
             for b, files in self._resolve_files(new_snap).items()
-            if sum(1 for fe in files if fe.get("kind", "base") == "delta")
+            if sum(1 for fe in files if fe["kind"] == "delta")
             >= self.compact_threshold + (int(b) % self.compact_stagger)
         ]
         if over:
             try:
-                c = self.compact(
-                    buckets=over,
-                    batch_id=f"{stats.batch_id}:compact",
-                    sort_by_seq=self.compact_sort_by_seq,
-                    target_file_rows=self.compact_target_file_rows,
-                )
+                c = self.compact(buckets=over, batch_id=f"{stats.batch_id}:compact")
                 stats.compacted_buckets = len(over)
                 stats.committed_version = c.committed_version
             except ConcurrentCommitError:
@@ -2275,7 +2257,6 @@ class LakeTable:
         schema_id = self._next_schema_id(snap, table_schema)
         new_snap["schemas"][str(schema_id)] = table_schema.jsonValue()
         new_snap["current_schema_id"] = schema_id
-        new_snap.setdefault("manifests", [])
         attempt_manifests: list[str] = []
         if file_updates:
             # file lists go into an immutable per-commit manifest, NOT the
@@ -2291,9 +2272,8 @@ class LakeTable:
             name = self._write_manifest(new_snap["version"], False, full)
             attempt_manifests.append(name)
             new_snap["manifests"] = [name]
-            new_snap["files"] = {}
         if stats.per_bucket and not append:
-            bucket_stats = dict(new_snap.get("bucket_stats", {}))
+            bucket_stats = dict(new_snap["bucket_stats"])
             for b, p in stats.per_bucket.items():
                 bucket_stats[str(b)] = p
             new_snap["bucket_stats"] = bucket_stats
@@ -2483,7 +2463,7 @@ class LakeTable:
                 resolved = self._resolve_files(snap)
             except FileNotFoundError:
                 continue
-            live_manifests.update(snap.get("manifests", []))
+            live_manifests.update(snap["manifests"])
             for files in resolved.values():
                 referenced.update(os.path.normpath(fe["path"]) for fe in files)
         # data files no surviving snapshot references (incl. crash orphans)
@@ -2577,7 +2557,7 @@ class LakeTable:
                 "operation": s.get("operation"),
                 "schema_id": s["current_schema_id"],
                 "batches": [b for b, ver in s["ledger"].items() if ver == s["version"]],
-                "stats": dict(s.get("stats", {})),
+                "stats": dict(s["stats"]),
             }
             # ends where expire_snapshots() removed older snapshots
             for s in reversed(self._chain(self.current_version()))

@@ -47,14 +47,9 @@ class PipelineConfig:
     salt_dedup: int = 0  # >1: two-phase salted dedup against hot-key skew
     near_dup_threshold: float | None = None  # near-dup-on-ingest Jaccard cutoff
     near_dup_retract: bool = False  # deletes/rewrites retract old index content
-    compact_sort_by_seq: bool = False  # auto-compactions keep seq-clustered files
-    compact_target_file_rows: int | None = None  # file-roll size when sorting
     #: exactly-once ledger retention window in commits (None = unbounded);
     #: size beyond the source's re-delivery horizon — see LakeTable.ledger_keep
     ledger_keep: int | None = None
-    #: optimistic-concurrency commit retries when another writer shares the
-    #: table (0 = strict single-writer refusal) — see LakeTable.commit_retries
-    commit_retries: int = 4
     #: serving profile: stamp per-file key Bloom filters on delta files with
     #: ≤ this many rows so read_keys prunes un-compacted deltas (opt-in,
     #: costs ~5% of merge wall) — see LakeTable.key_bloom_rows
@@ -87,13 +82,10 @@ class CdcPipeline:
         )
         # tune MAIN first: branch handles are copies and inherit, and a
         # rebase publish merges onto main — which must carry the same
-        # serving blooms / ledger retention / retry budget as the staged
-        # commits did (tuning only the branch copy silently ran publishes
-        # at class defaults)
-        self.table.compact_sort_by_seq = cfg.compact_sort_by_seq
-        self.table.compact_target_file_rows = cfg.compact_target_file_rows
+        # serving blooms / ledger retention as the staged commits did
+        # (tuning only the branch copy silently ran publishes at class
+        # defaults)
         self.table.ledger_keep = cfg.ledger_keep
-        self.table.commit_retries = cfg.commit_retries
         self.table.key_bloom_rows = cfg.key_bloom_rows
         #: the un-branched (main-head) handle — publish/reject target when
         #: ``cfg.branch`` routes the pipeline's commits through a branch

@@ -334,45 +334,3 @@ def test_rewrite_commits_stamp_zone_maps_for_ntz_timestamps(spark, tmp_root):
     fresh = table.read(min_seq_ts="2025-01-06 00:00:00")
     assert {r.url for r in fresh.collect()} == {"u5", "u6", "u7"}
     assert len(fresh.inputFiles()) < len(table.read().inputFiles())
-
-
-def test_pipeline_auto_compaction_keeps_sorted_zone_mapped_layout(spark, tmp_root):
-    """`PipelineConfig(compact_sort_by_seq=True, compact_target_file_rows=N)`:
-    the merge-triggered auto-compactions keep base files seq-clustered and
-    split, so a steady-state table stays zone-map-prunable for incremental
-    consumers with no separate OPTIMIZE pass — and the layout policy is
-    state-invisible vs the default pipeline on the same stream."""
-    from data_pipelines_spark.gen.changegen import change_stream
-    from data_pipelines_spark.streaming.pipeline import CdcPipeline, PipelineConfig
-
-    changes = change_stream(spark, n_events=1200, n_keys=100, seed=5)
-    plain = CdcPipeline(
-        spark,
-        PipelineConfig(table_root=os.path.join(tmp_root, "plain"), n_buckets=4),
-    )
-    sorted_p = CdcPipeline(
-        spark,
-        PipelineConfig(
-            table_root=os.path.join(tmp_root, "sorted"),
-            n_buckets=4,
-            compact_sort_by_seq=True,
-            compact_target_file_rows=10,
-        ),
-    )
-    for p in (plain, sorted_p):
-        p.table.compact_threshold = 2
-        p.table.compact_stagger = 1
-        p.run_batches(changes, n_batches=4)
-
-    key = lambda r: (r.url, r.warc_ts, r.offset)
-    assert sorted(map(key, sorted_p.table.read().collect())) == sorted(
-        map(key, plain.table.read().collect())
-    )
-    snap = sorted_p.table._snapshot(sorted_p.table.current_version())
-    files = sorted_p.table._resolve_files(snap)
-    base = {
-        b: [fe for fe in fl if fe.get("kind", "base") == "base"]
-        for b, fl in files.items()
-    }
-    assert any(len(fl) > 1 for fl in base.values())
-    assert all("ts_min" in fe for fl in base.values() for fe in fl)

@@ -7,13 +7,19 @@ content_hash, op, lang) are written without them. The manifest zone maps of
 every write path (merge deltas, compaction, overwrite) then come from those
 footers driver-side, so a rewrite's accounting launches no Spark job. These
 tests pin the policy, the zone maps against Spark's own min/max, the
-point-lookup file set, and the per-call job budgets.
+point-lookup file set and bucket routing, the per-call job budgets, and the
+one snapshot format every commit path writes.
 """
 
+import datetime as dt
+import glob
+import json
 import os
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_pipelines_spark.functions.hashing import bucket_id
 from data_pipelines_spark.gen.changegen import change_stream
@@ -174,3 +180,87 @@ def test_metadata_only_job_budgets(spark, tmp_root):
     assert v == t.current_version() and n == 0
     st, n = _jobs(spark, "expire", lambda: t.expire_snapshots(keep_last=1))
     assert st["snapshots_expired"] > 0 and n == 0
+
+
+@pytest.mark.parametrize("key_type", ["string", "long", "int"])
+def test_read_keys_routes_buckets_with_zero_jobs(spark, tmp_root, key_type):
+    """read_keys hashes its keys into bucket ids while Spark plans (a local
+    relation), so the call launches no job; the ids equal Spark's bucket_id
+    over the same keys under the table's key type."""
+    schema = T.StructType(
+        [
+            T.StructField("op", T.StringType()),
+            T.StructField("k", T.StringType() if key_type == "string" else
+                          T.LongType() if key_type == "long" else T.IntegerType()),
+            T.StructField("warc_ts", T.TimestampType()),
+            T.StructField("offset", T.LongType()),
+        ]
+    )
+    cast = str if key_type == "string" else int
+    t = LakeTable.create(spark, os.path.join(tmp_root, key_type), key="k", n_buckets=8)
+    ts = dt.datetime(2025, 1, 1)
+    t.merge(spark.createDataFrame([("I", cast(i), ts, i) for i in range(200)], schema), 1)
+    keys = [cast(i) for i in range(0, 400, 17)]  # half are absent
+
+    routed = []
+    read = t.read
+    t.read = lambda **kw: routed.append(kw["buckets"]) or read(**kw)
+    df, n = _jobs(spark, f"read_keys_{key_type}", lambda: t.read_keys(keys))
+    assert n == 0
+
+    want = sorted(
+        r.b
+        for r in spark.createDataFrame([(k,) for k in keys], T.StructType([schema["k"]]))
+        .select(bucket_id(F.col("k"), 8).alias("b"))
+        .distinct()
+        .collect()
+    )
+    assert routed == [want]
+    assert sorted(r.k for r in df.collect()) == sorted(k for k in keys if int(k) < 200)
+
+
+KNOWN_OPERATIONS = {
+    "merge", "compact", "overwrite", "backfill", "rebucket", "vacuum",
+    "schema-update", "rollback",
+}
+
+
+def test_every_commit_path_writes_one_snapshot_format(spark, tmp_root):
+    """Every snapshot carries an operation tag and an integer parent, and no
+    inline file list: readers assume this one format."""
+    t = LakeTable.create(spark, os.path.join(tmp_root, "f"), n_buckets=4)
+    changes = change_stream(spark, n_events=600, n_keys=120, seed=3)
+    part = lambda lo, hi: changes.where((F.col("offset") >= lo) & (F.col("offset") < hi))
+    t.merge(part(0, 150), "b0")
+    t.merge(part(150, 300), "b1")
+    t.compact(buckets=[0], batch_id="c1")
+    t.overwrite(part(0, 300), "ow")
+    t.update_schema(T.StructType(t.schema().fields + [T.StructField("note", T.StringType())]))
+    t.backfill("note", F.lit("x"), batch_id="bf")
+    t.vacuum_tombstones("vac", older_than="2100-01-01")
+    t.rebucket(2, batch_id="rb")
+    t.create_branch("ff")
+    t.branch("ff").merge(part(300, 400), "b2")
+    t.publish("ff")
+    rollback_to = t.current_version()
+    t.create_branch("rebase")
+    t.branch("rebase").merge(part(400, 500), "b3")
+    t.merge(part(500, 600), "b4")
+    t.publish("rebase", mode="rebase")
+    t.rollback(rollback_to, batch_id="rbk")
+
+    snaps = {}
+    for path in glob.glob(os.path.join(t.root, "metadata", "v*.json")):
+        with open(path) as f:
+            snap = json.load(f)
+        snaps[snap["version"]] = snap
+    assert snaps[0]["parent"] is None and "files" not in snaps[0]
+    ops = set()
+    for v, snap in snaps.items():
+        if v == 0:
+            continue
+        assert snap["operation"] in KNOWN_OPERATIONS, (v, snap.get("operation"))
+        assert isinstance(snap["parent"], int) and snap["parent"] < v, v
+        assert "files" not in snap, v
+        ops.add(snap["operation"])
+    assert ops == KNOWN_OPERATIONS

@@ -4,10 +4,20 @@ feeds minimal dataTable snippets and asserts field values). Same model here:
 tiny deterministic pages through the vectorized UDFs.
 """
 
+import html
+import random
+import re
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
 from data_pipelines_spark.extract.html import (
+    _COMMENT_RE,
+    _SKIP_BLOCK_RE,
+    _TAG_RE,
+    _clean,
+    _to_text_one,
     extract_bouts,
     extract_page_fields,
     html_to_text,
@@ -184,3 +194,39 @@ def test_bout_id_positional_index(spark, pages):
         .collect()
     )
     assert [r.bid for r in ids] == ["2_bout_0", "2_bout_1"]
+
+
+def _regex_collapse(s: str) -> str:
+    """The reference whitespace collapse the decode kernel must equal."""
+    return re.sub(r"\s+", " ", s).strip()
+
+
+def test_whitespace_collapse_equals_regex_on_every_code_point():
+    """The decode kernel collapses whitespace with str.split(); that must be
+    byte-identical to re.sub(r"\\s+", " ", s).strip() for every code point
+    (lone surrogates included), inside, repeated and at the edges of a
+    string, and on random mixes of tags, entities and Unicode whitespace."""
+    chars = [chr(c) for c in range(sys.maxunicode + 1)]
+    for i in range(0, len(chars), 4096):
+        chunk = chars[i : i + 4096]
+        inner = "".join(f"a{c}b{c}{c}" for c in chunk)
+        assert _clean(inner) == _regex_collapse(_TAG_RE.sub(" ", inner)), i
+    for c in chars:
+        edge = f"{c}a{c}"
+        assert _clean(edge) == _regex_collapse(edge), hex(ord(c))
+
+    def reference(page: str) -> str:
+        s = _SKIP_BLOCK_RE.sub(" ", page)
+        s = _COMMENT_RE.sub(" ", s)
+        s = html.unescape(_TAG_RE.sub(" ", s))
+        return _regex_collapse(s)
+
+    spaces = [c for c in chars if c.isspace()]
+    alphabet = spaces + list("ab<>/&;#x") + [
+        "<p>", "</p>", "<script>x</script>", "<!-- c -->", "&nbsp;",
+        "&#x2003;", "&#133;", "&amp;", "\ud800", "\udfff", "é", "\u200b",
+    ]
+    rng = random.Random(7)
+    for _ in range(20000):
+        page = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 24)))
+        assert _to_text_one(page) == reference(page), repr(page)
