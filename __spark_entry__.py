@@ -637,8 +637,8 @@ def cdc_wap_publish(spark, sf):
 
 
 def a9_throughput_report(spark, sf):
-    """A9 run-rate counters: the per-batch lineage/throughput report of a
-    3-batch CDC replay (rows in, upserts, deletes, offset span per commit).
+    """A9 run-rate counters: the per-batch throughput report (read from
+    each merge's snapshot summary) of a 3-batch CDC replay (rows in, upserts, deletes, offset span per commit).
     The oracle predicts every number from the offset-range batch slicing +
     per-batch LWW winners computed in SQL."""
     changes = _events_as_changes(spark, sf)

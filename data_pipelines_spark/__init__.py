@@ -12,7 +12,7 @@ A from-scratch engine with the capabilities of the reference ETL pipeline
 - ``extract``    — vectorized pandas/Arrow UDFs (HTML→text, field extraction,
                    language ID, quality scoring, multimodal plumbing).
 - ``streaming``  — Structured Streaming CDC pipeline (readStream → foreachBatch
-                   MERGE) with exactly-once ledger and lineage metrics.
+                   MERGE) with exactly-once ledger and per-commit summaries.
 """
 
 __version__ = "0.1.0"

@@ -161,6 +161,14 @@ def _as_nullable(dt: T.DataType) -> T.DataType:
     return dt
 
 
+def _json_bound(v):
+    """A footer min/max made JSON-safe for the commit summary: timestamps
+    in the zone-map format, numbers and strings as they are."""
+    if isinstance(v, datetime):
+        return _seq_bound_py(v)
+    return v if v is None or isinstance(v, (int, float, str)) else str(v)
+
+
 def _seq_bound_py(v) -> str | None:
     """Canonical zone-map bound for a timestamp read from parquet footers /
     user arguments: fixed-width session-TZ (UTC) format with microseconds,
@@ -289,7 +297,8 @@ class LakeTable:
     immutable per-commit manifests — Iceberg's snapshot → manifest shape,
     so commit metadata is O(files changed), not O(table files); the chain
     auto-consolidates past ``MANIFEST_SQUASH``), the commit ledger
-    (batch_id → version), table stats.
+    (batch_id → version), and the commit's own ``summary`` (see
+    :meth:`history`).
     """
 
     def __init__(
@@ -393,8 +402,7 @@ class LakeTable:
             "schemas": {},
             "manifests": [],
             "ledger": {},
-            "bucket_stats": {},
-            "stats": {"total_rows": 0, "live_rows": 0, "tombstones": 0},
+            "summary": {},
         }
         t._write_snapshot(snap)
         t._swap_pointer(expected=None, new_version=0)
@@ -777,7 +785,7 @@ class LakeTable:
         for s in reversed(chain[:-1]):
             op = s.get("operation")
             sv = s["version"]
-            batches = [bi for bi, ver in s["ledger"].items() if ver == sv]
+            bid = s["summary"]["batch_id"]
             if op in ("compact", "vacuum", "rebucket"):
                 continue  # physical reorganizations: no logical change
             if op == "schema-update":
@@ -785,10 +793,8 @@ class LakeTable:
                 # id, which this head's ledger may already hold from its own
                 # post-fork update — reusing it would skip the replay
                 sch = self.schema_from_snap(s)
-                if sch is not None and batches:
-                    self.update_schema(
-                        sch, batch_id=f"rebase:{name}:{sv}:{batches[0]}"
-                    )
+                if sch is not None:
+                    self.update_schema(sch, batch_id=f"rebase:{name}:{sv}:{bid}")
                 continue
             if op != "merge":
                 raise ConcurrentCommitError(
@@ -796,10 +802,8 @@ class LakeTable:
                     "folded into rewritten files and cannot be replayed "
                     "row-wise; re-stage on a fresh branch"
                 )
-            if not batches:
-                continue
             rows = b.change_log(s["parent"], sv).drop("_commit_version")
-            self.merge(rows, batch_id=batches[0])
+            self.merge(rows, batch_id=bid)
         return self.current_version()
 
     def _write_snapshot(self, snap: dict) -> None:
@@ -1746,7 +1750,7 @@ class LakeTable:
         every live key matching ``predicate`` — as a DataFrame, for callers
         that route DML through a richer commit path (``CdcPipeline.
         delete_where`` feeds it to ``process_batch`` so the attached near-dup
-        index retracts, aggregate views maintain, and lineage rows emit)."""
+        index retracts and aggregate views maintain)."""
         target = self.schema_from_snap(self._snapshot())
         if target is None:
             raise ValueError("table has no schema yet (no data committed)")
@@ -1971,11 +1975,8 @@ class LakeTable:
             sort_seq=sort_by_seq, sort_key=sort_by_key,
             max_file_rows=target_file_rows,
         )
-        # the committed snapshot carries the new layout; bucket_stats start
-        # fresh (old-layout keys must not linger)
-        snap_new = json.loads(json.dumps(snap))
-        snap_new["n_buckets"] = n_buckets
-        snap_new["bucket_stats"] = {}
+        # the committed snapshot carries the new layout
+        snap_new = dict(snap, n_buckets=n_buckets)
         new_files = self._list_written(commit_dir, snap_new, table_schema, stats, kind="base")
         self._stats_from_footers(new_files, stats, kind="base")
         for b in range(n_buckets):
@@ -2272,18 +2273,21 @@ class LakeTable:
             name = self._write_manifest(new_snap["version"], False, full)
             attempt_manifests.append(name)
             new_snap["manifests"] = [name]
-        if stats.per_bucket and not append:
-            bucket_stats = dict(new_snap["bucket_stats"])
-            for b, p in stats.per_bucket.items():
-                bucket_stats[str(b)] = p
-            new_snap["bucket_stats"] = bucket_stats
-            tomb = sum(p["tombstones"] for p in bucket_stats.values())
-            rows = sum(p["rows"] for p in bucket_stats.values())
-            new_snap["stats"] = {
-                "total_rows": rows,
-                "live_rows": rows - tomb,
-                "tombstones": tomb,
-            }
+        # what THIS commit did (Delta's per-commit operationMetrics): set on
+        # every commit, never inherited from the copied parent, so the log
+        # is the one record of each batch — metadata-only commits carry an
+        # empty one
+        new_snap["summary"] = {
+            "batch_id": str(stats.batch_id),
+            "files": stats.files_written,
+            "bytes": stats.bytes_written,
+            "buckets": {
+                str(b): [p["rows"], p["tombstones"]]
+                for b, p in sorted(stats.per_bucket.items())
+            },
+            "seq_min": _json_bound(stats.seq_min),
+            "seq_max": _json_bound(stats.seq_max),
+        }
         new_snap["ledger"][str(stats.batch_id)] = new_snap["version"]
         if self.ledger_keep is not None:
             # the retention window is "the last N commits ON THIS LINEAGE" —
@@ -2372,9 +2376,6 @@ class LakeTable:
         committed at or below this version can no longer be recognized as
         duplicates."""
         return self._snapshot().get("ledger_floor")
-
-    def stats(self) -> dict:
-        return dict(self._snapshot()["stats"])
 
     def _chain(
         self, v: int | None, limit: int | None = None, stop: int | None = None
@@ -2510,7 +2511,7 @@ class LakeTable:
         """RESTORE the table to an earlier snapshot as a NEW commit — the
         Delta ``RESTORE`` / Iceberg rollback analog, roll-forward style: no
         snapshot file is rewritten and history is preserved, the new version
-        simply references the old snapshot's manifests, schema and stats
+        simply references the old snapshot's manifests and schema
         (metadata-only, zero data movement; the restored files still exist
         unless :meth:`expire_snapshots` already GC'd that version — then this
         raises ``FileNotFoundError`` before anything changes).
@@ -2548,8 +2549,11 @@ class LakeTable:
 
     def history(self) -> list[dict]:
         """Snapshot log (oldest→newest): version, parent, schema id, batch
-        ids committed at that version, table stats — Iceberg's snapshot
-        history analog, also the audit trail for replay verification."""
+        ids committed at that version, and each commit's own ``summary``
+        (files, bytes, per-bucket ``[rows, tombstones]``, tie-column span)
+        — Iceberg's snapshot history analog, also the audit trail for
+        replay verification and the source of the pipeline's throughput
+        report."""
         return [
             {
                 "version": s["version"],
@@ -2557,7 +2561,7 @@ class LakeTable:
                 "operation": s.get("operation"),
                 "schema_id": s["current_schema_id"],
                 "batches": [b for b, ver in s["ledger"].items() if ver == s["version"]],
-                "stats": dict(s["stats"]),
+                "summary": s["summary"],
             }
             # ends where expire_snapshots() removed older snapshots
             for s in reversed(self._chain(self.current_version()))

@@ -9,7 +9,7 @@ microbatch —
       → decode (vectorized pandas UDFs: html→text, lang fill)
       → repartition by key                       # co-locate for the merge join
       → LakeTable.merge (LWW dedup + keyed upsert + tombstone deletes)
-      → lineage row per bucket                   # offset range, counts, bytes
+      → commit summary in the snapshot           # offset span, counts, bytes
 
 Exactly-once: the streaming checkpoint makes batch ids stable across retries,
 and ``LakeTable.merge`` skips batch ids already in the snapshot ledger, so a
@@ -27,13 +27,6 @@ from pyspark.sql import functions as F
 
 from data_pipelines_spark.extract.html import html_to_text
 from data_pipelines_spark.lake import LakeTable, MergeStats
-
-LINEAGE_SCHEMA = (
-    "batch_id long, bucket int, rows long, tombstones long, "
-    "offset_min long, offset_max long, rows_in long, rows_upserted long, "
-    "rows_deleted long, bytes_written long, commit_version long, files_written int"
-)
-
 
 @dataclass
 class PipelineConfig:
@@ -63,7 +56,8 @@ class PipelineConfig:
 
 
 class CdcPipeline:
-    """Drives change batches into a :class:`LakeTable` with lineage."""
+    """Drives change batches into a :class:`LakeTable`; each commit's
+    snapshot summary is the per-batch record (:meth:`throughput_report`)."""
 
     def __init__(self, spark: SparkSession, cfg: PipelineConfig):
         if cfg.extract_fields and not cfg.decode:
@@ -94,7 +88,6 @@ class CdcPipeline:
             if cfg.branch not in self.table.branches():
                 self.table.create_branch(cfg.branch)
             self.table = self.table.branch(cfg.branch)
-        self._lineage_dir = os.path.join(cfg.table_root, "_lineage")
         #: incrementally-maintained aggregate views (lake.aggview.AggView),
         #: folded forward after every commit — see :meth:`attach_view`
         self.views: list = []
@@ -169,9 +162,12 @@ class CdcPipeline:
         folds bumps back into plain rows.
 
         The state side is a (key, content_hash) column-pruned read restricted
-        to the hash buckets the batch actually touches (one narrow
-        distinct-buckets job, bounded by n_buckets), so the state scan is
-        O(affected buckets), not O(table).
+        to the hash buckets the batch actually touches, so the state scan is
+        O(affected buckets), not O(table). Finding those buckets collects a
+        distinct over the batch: 2 Spark jobs per batch (traced perfbench
+        serve_and_follow: ``pipeline.change_filtered.jobs`` = 8 over 4
+        batches), and on batches large enough to touch every bucket it
+        prunes nothing.
         """
         from data_pipelines_spark.functions.hashing import bucket_id, content_hash
 
@@ -282,8 +278,8 @@ class CdcPipeline:
             kept = kept.drop("_sign_text")
         return kept.unionByName(others, allowMissingColumns=True)
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> MergeStats:
-        """foreachBatch body: LWW dedup → decode winners → merge → lineage.
+    def process_batch(self, batch: DataFrame, batch_id: int | str) -> MergeStats:
+        """foreachBatch body: LWW dedup → decode winners → merge.
 
         Decode runs *after* the dedup (``transform_after_dedup``): the UDF
         never sees duplicate deliveries or superseded versions, and the dedup
@@ -305,9 +301,6 @@ class CdcPipeline:
             transform_after_dedup=transform,
             salt_dedup=self.cfg.salt_dedup,
         )
-        if not stats.skipped_duplicate_batch:
-            # the merge's pre-aggregation already recorded the offset span
-            self._write_lineage(stats, stats.seq_min, stats.seq_max)
         # maintain attached views even on a skipped duplicate: a crash between
         # the merge commit and the view update re-delivers the batch with the
         # merge as a ledger no-op, but the view still has to catch up — and
@@ -427,10 +420,9 @@ class CdcPipeline:
         (:meth:`LakeTable.delete_where_frame`) commits as an ordinary CDC
         batch via :meth:`process_batch`, so every attached side-structure
         tracks in the same exactly-once step — the near-dup/ANN index
-        retracts the dead content (``near_dup_retract=True``), aggregate
-        views maintain incrementally, and a lineage row emits. Table-level
-        ``LakeTable.delete_where`` reaches the same final table state but
-        bypasses those structures."""
+        retracts the dead content (``near_dup_retract=True``) and aggregate
+        views maintain incrementally. Table-level ``LakeTable.delete_where``
+        reaches the same final table state but bypasses those structures."""
         return self.process_batch(
             self.table.delete_where_frame(predicate, seq, predicate_columns),
             batch_id,
@@ -450,61 +442,39 @@ class CdcPipeline:
             self.table.update_where_frame(predicate, set, seq), batch_id
         )
 
-    def _write_lineage(self, s: MergeStats, lo, hi) -> None:
-        """Append one parquet file of per-bucket lineage rows.
-
-        Written driver-side with pyarrow — metrics must not cost a Spark job
-        per microbatch. The rows are tiny (bounded by n_buckets).
-        """
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        buckets = list(s.per_bucket.items()) or [(-1, {"rows": 0, "tombstones": 0})]
-        n = len(buckets)
-        tbl = pa.table(
-            {
-                "batch_id": pa.array([int(s.batch_id)] * n, pa.int64()),
-                "bucket": pa.array([b for b, _ in buckets], pa.int32()),
-                "rows": pa.array([p["rows"] for _, p in buckets], pa.int64()),
-                "tombstones": pa.array([p["tombstones"] for _, p in buckets], pa.int64()),
-                "offset_min": pa.array([lo] * n, pa.int64()),
-                "offset_max": pa.array([hi] * n, pa.int64()),
-                "rows_in": pa.array([s.rows_in] * n, pa.int64()),
-                "rows_upserted": pa.array([s.rows_upserted] * n, pa.int64()),
-                "rows_deleted": pa.array([s.rows_deleted] * n, pa.int64()),
-                "bytes_written": pa.array([s.bytes_written] * n, pa.int64()),
-                "commit_version": pa.array([s.committed_version] * n, pa.int64()),
-                "files_written": pa.array([s.files_written] * n, pa.int32()),
-            }
-        )
-        os.makedirs(self._lineage_dir, exist_ok=True)
-        pq.write_table(tbl, os.path.join(self._lineage_dir, f"batch-{s.batch_id}.parquet"))
-
-    def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(self._lineage_dir)
-
     def throughput_report(self) -> DataFrame:
-        """Per-batch ingest metrics from the lineage table — the engine's
-        analog of the reference's run-rate instrumentation
-        (``boxing/scrapers/boxrec/boxer.py:122-133, 239-251``): rows in,
-        upserts/deletes, bytes written, buckets touched, offset span.
-        """
-        lin = self.lineage()
-        return (
-            lin.groupBy("batch_id")
-            .agg(
-                F.first("rows_in").alias("rows_in"),
-                F.first("rows_upserted").alias("rows_upserted"),
-                F.first("rows_deleted").alias("rows_deleted"),
-                F.first("bytes_written").alias("bytes_written"),
-                # bucket -1 is the empty-batch sentinel row, not a real bucket
-                F.count(F.when(F.col("bucket") != -1, 1)).alias("buckets_touched"),
-                F.first("offset_min").alias("offset_min"),
-                F.first("offset_max").alias("offset_max"),
-                F.first("commit_version").alias("commit_version"),
-            )
-            .orderBy("batch_id")
-        )
+        """Per-batch ingest metrics — the engine's analog of the reference's
+        run-rate instrumentation (``boxing/scrapers/boxrec/boxer.py:122-133,
+        239-251``): one row per merge commit on this pipeline's head chain,
+        in commit order — rows in, upserts/deletes, bytes written, buckets
+        touched, offset span, commit version. Read from the commit summaries
+        in :meth:`LakeTable.history`, so every merge counts however it was
+        committed, and a rejected branch's batches are off the chain. A
+        driver-side Arrow table: a local relation, no Spark job."""
+        import pyarrow as pa
+
+        merges = [h for h in self.table.history() if h["operation"] == "merge"]
+        sums = [h["summary"] for h in merges]
+        buckets = [list(m["buckets"].values()) for m in sums]
+        rows_in = [sum(r for r, _ in b) for b in buckets]
+        deleted = [sum(t for _, t in b) for b in buckets]
+
+        def span(k):  # longs for offsets, strings for timestamp tie columns
+            arr = pa.array([m[k] for m in sums])
+            return arr.cast(pa.int64()) if pa.types.is_null(arr.type) else arr
+
+        long = pa.int64()
+        return self.spark.createDataFrame(pa.table({
+            "batch_id": pa.array([m["batch_id"] for m in sums], pa.string()),
+            "rows_in": pa.array(rows_in, long),
+            "rows_upserted": pa.array([i - d for i, d in zip(rows_in, deleted)], long),
+            "rows_deleted": pa.array(deleted, long),
+            "bytes_written": pa.array([m["bytes"] for m in sums], long),
+            "buckets_touched": pa.array([len(b) for b in buckets], long),
+            "offset_min": span("seq_min"),
+            "offset_max": span("seq_max"),
+            "commit_version": pa.array([h["version"] for h in merges], long),
+        }))
 
     # ------------------------------------------------------------- streaming
 

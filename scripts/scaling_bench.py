@@ -359,14 +359,6 @@ UDF decode (html→text, lang backfill), shuffle partitions = 16.
 """
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    # preserve sections other harnesses own (amortization_bench.py appends
-    # its "## Amortization" section to this file)
-    if os.path.exists(path):
-        with open(path) as f:
-            old = f.read()
-        idx = old.find("## Amortization")
-        if idx != -1:
-            md = md + "\n" + old[idx:]
     with open(path, "w") as f:
         f.write(md)
     print(md)

@@ -7,8 +7,9 @@ content_hash, op, lang) are written without them. The manifest zone maps of
 every write path (merge deltas, compaction, overwrite) then come from those
 footers driver-side, so a rewrite's accounting launches no Spark job. These
 tests pin the policy, the zone maps against Spark's own min/max, the
-point-lookup file set and bucket routing, the per-call job budgets, and the
-one snapshot format every commit path writes.
+point-lookup file set and bucket routing, the per-call job budgets, the
+one snapshot format every commit path writes, and the per-commit summary
+the pipeline's throughput report is read from.
 """
 
 import datetime as dt
@@ -101,12 +102,14 @@ def test_footer_policy_and_zone_maps_on_every_write_path(spark, tmp_root):
     Cascade(t, silver).rebuild()  # INSERT OVERWRITE into silver
     assert {fe["kind"] for fe in _entries(silver)} == {"base"}
     _check_footers_and_zone_maps(spark, silver)
-    # accounting from footers matches the table's contents
+    # the overwrite's footer accounting matches the table's contents
     snap = silver._snapshot()
-    assert snap["stats"]["total_rows"] == silver.read(
+    assert snap["operation"] == "overwrite"
+    per_bucket = snap["summary"]["buckets"].values()
+    assert sum(r for r, _ in per_bucket) == silver.read(
         include_tombstones=True
     ).count()
-    assert snap["stats"]["live_rows"] == silver.read().count()
+    assert sum(r - d for r, d in per_bucket) == silver.read().count()
 
 
 def test_read_keys_opens_the_spark_min_max_file_set(spark, tmp_root):
@@ -226,8 +229,9 @@ KNOWN_OPERATIONS = {
 
 
 def test_every_commit_path_writes_one_snapshot_format(spark, tmp_root):
-    """Every snapshot carries an operation tag and an integer parent, and no
-    inline file list: readers assume this one format."""
+    """Every snapshot carries an operation tag, an integer parent and its
+    own commit summary, and no inline file list or table-level stats:
+    readers assume this one format."""
     t = LakeTable.create(spark, os.path.join(tmp_root, "f"), n_buckets=4)
     changes = change_stream(spark, n_events=600, n_keys=120, seed=3)
     part = lambda lo, hi: changes.where((F.col("offset") >= lo) & (F.col("offset") < hi))
@@ -257,10 +261,93 @@ def test_every_commit_path_writes_one_snapshot_format(spark, tmp_root):
     assert snaps[0]["parent"] is None and "files" not in snaps[0]
     ops = set()
     for v, snap in snaps.items():
+        assert "stats" not in snap and "bucket_stats" not in snap, v
         if v == 0:
             continue
         assert snap["operation"] in KNOWN_OPERATIONS, (v, snap.get("operation"))
         assert isinstance(snap["parent"], int) and snap["parent"] < v, v
         assert "files" not in snap, v
+        # the summary names the batch the ledger maps to this version, and
+        # is replaced on every commit, never inherited from the parent
+        summary = snap["summary"]
+        assert snap["ledger"][summary["batch_id"]] == v, (v, summary)
+        if snap["operation"] in ("schema-update", "rollback"):
+            assert summary["files"] == 0 and summary["buckets"] == {}, v
         ops.add(snap["operation"])
     assert ops == KNOWN_OPERATIONS
+
+
+# ------------------------------------------------------ commit summaries
+
+REPORT_COLS = (
+    "batch_id", "rows_in", "rows_upserted", "rows_deleted", "bytes_written",
+    "buckets_touched", "offset_min", "offset_max", "commit_version",
+)
+
+
+def _summary_pipe(spark, root, **cfg):
+    changes = change_stream(spark, n_events=300, n_keys=60, seed=5)
+    part = lambda lo, hi: changes.where(
+        (F.col("offset") >= lo) & (F.col("offset") < hi)
+    )
+    pipe = CdcPipeline(
+        spark, PipelineConfig(table_root=root, n_buckets=4, decode=False, **cfg)
+    )
+    return pipe, part
+
+
+def _report_ids(pipe) -> list[str]:
+    return [str(r.batch_id) for r in pipe.throughput_report().collect()]
+
+
+def test_report_equals_merge_stats_with_zero_jobs(spark, tmp_root):
+    """The report is the commit summaries, read back as a local relation:
+    one row per merge, the numbers each merge returned, no Spark job."""
+    pipe, part = _summary_pipe(spark, os.path.join(tmp_root, "t"))
+    out = [pipe.process_batch(part(i * 100, (i + 1) * 100), i) for i in range(3)]
+    report, jobs = _jobs(spark, "report", lambda: pipe.throughput_report().collect())
+    assert jobs == 0
+    assert [tuple(r[c] for c in REPORT_COLS) for r in report] == [
+        (
+            str(s.batch_id), s.rows_in, s.rows_upserted, s.rows_deleted,
+            s.bytes_written, s.buckets_touched, s.seq_min, s.seq_max,
+            s.committed_version,
+        )
+        for s in out
+    ]
+    assert all(r.rows_in > 0 for r in report)
+
+
+def test_report_keeps_a_batch_committed_before_a_crash(spark, tmp_root):
+    """A crash between the commit and any metrics write: the batch committed
+    straight through the table, then its re-delivery is a ledger no-op. The
+    snapshot's summary is the record, so the batch is in the report."""
+    root = os.path.join(tmp_root, "t")
+    pipe, part = _summary_pipe(spark, root)
+    committed = pipe.table.merge(part(0, 100), batch_id=0)
+    assert pipe.process_batch(part(0, 100), 0).skipped_duplicate_batch
+    pipe.process_batch(part(100, 200), 1)
+    assert _report_ids(pipe) == ["0", "1"]
+    assert pipe.throughput_report().first().rows_in == committed.rows_in > 0
+    assert not os.path.exists(os.path.join(root, "_lineage"))
+
+
+def test_report_drops_a_rejected_branchs_batches(spark, tmp_root):
+    """The report follows the branch head's chain, which re-forks at main
+    after a reject: the rejected batches are off it."""
+    pipe, part = _summary_pipe(
+        spark, os.path.join(tmp_root, "t"), branch="staging"
+    )
+    pipe.process_batch(part(0, 100), 0)
+    pipe.process_batch(part(100, 200), 1)
+    assert _report_ids(pipe) == ["0", "1"]
+    pipe.reject_branch()
+    pipe.process_batch(part(200, 300), 2)
+    assert _report_ids(pipe) == ["2"]
+
+
+def test_string_batch_ids_commit_and_report(spark, tmp_root):
+    pipe, part = _summary_pipe(spark, os.path.join(tmp_root, "t"))
+    stats = pipe.process_batch(part(0, 100), "m1")
+    assert stats.committed_version is not None and stats.rows_in > 0
+    assert _report_ids(pipe) == ["m1"]

@@ -75,9 +75,9 @@ def test_streaming_and_checkpoint_resume(spark, tmp_root, changes, oracle):
     q2 = pipe.run_stream(log_dir, ckpt, schema, max_files_per_trigger=1)
     q2.awaitTermination()
     assert _state(pipe) == oracle
-    # every committed batch has lineage with a sane offset span
-    lin = pipe.lineage()
-    assert lin.where(F.col("offset_min") > F.col("offset_max")).count() == 0
+    # every committed batch has a report row with a sane offset span
+    report = pipe.throughput_report()
+    assert report.where(F.col("offset_min") > F.col("offset_max")).count() == 0
 
 
 def test_mid_stream_kill_and_resume(spark, tmp_root, changes, oracle):
@@ -172,8 +172,12 @@ def test_change_filter_skips_unchanged_rescrapes(spark, tmp_root):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
     # the filter must actually drop work: bump deltas carry no page bytes
-    bytes_plain = sum(r.bytes_written for r in pipes["plain"].lineage().collect())
-    bytes_filt = sum(r.bytes_written for r in pipes["filtered"].lineage().collect())
+    bytes_plain = sum(
+        r.bytes_written for r in pipes["plain"].throughput_report().collect()
+    )
+    bytes_filt = sum(
+        r.bytes_written for r in pipes["filtered"].throughput_report().collect()
+    )
     assert bytes_filt < bytes_plain
     changes.unpersist()
 
@@ -208,8 +212,8 @@ def test_bump_defeats_out_of_order_delete(spark, tmp_root):
     pipe.process_batch(batch([(3, "U", u, ts(3), html, "en")]), 0)
     # re-scrape with identical bytes -> reduced to a seq bump at offset 9
     pipe.process_batch(batch([(9, "U", u, ts(9), html, "en")]), 1)
-    lin = {r.batch_id: r for r in pipe.lineage().collect()}
-    assert lin[1].bytes_written < lin[0].bytes_written  # no page bytes shipped
+    report = {r.batch_id: r for r in pipe.throughput_report().collect()}
+    assert report["1"].bytes_written < report["0"].bytes_written  # no page bytes
     # late out-of-order delete between the stored and bumped sequences
     pipe.process_batch(batch([(7, "D", u, ts(7), None, None)]), 2)
 
