@@ -47,17 +47,32 @@ def _host_load() -> dict:
         return {}
 
 
-def _load_guard(load: dict) -> None:
+#: longest wait for the host to settle before the session starts
+SETTLE_TIMEOUT_S = 60.0
+
+
+def _settle(limit: float) -> float:
+    """Block until load1 < ``limit`` or :data:`SETTLE_TIMEOUT_S` passes;
+    returns the seconds waited."""
+    t0 = time.monotonic()
+    while (
+        _host_load().get("load1", 0.0) >= limit
+        and time.monotonic() - t0 < SETTLE_TIMEOUT_S
+    ):
+        time.sleep(1.0)
+    return time.monotonic() - t0
+
+
+def _load_guard(load: dict, limit: float) -> None:
     """Warn loudly (or refuse, under BENCH_LOAD_STRICT=1) when the host is
-    already busy before the timed window starts. Threshold in load-average
-    units via BENCH_LOAD_MAX (default 2.0)."""
-    limit = float(os.environ.get("BENCH_LOAD_MAX", "2.0"))
+    still busy after the settle wait, before the timed window starts."""
     load1 = load.get("load1")
-    if load1 is None or load1 <= limit:
+    if load1 is None or load1 < limit:
         return
     msg = (
-        f"bench: host load1={load1} exceeds {limit} before start — "
-        "numbers will be contaminated (see CLAUDE.md); run on an idle host"
+        f"bench: host load1={load1} is not below {limit} after "
+        f"{SETTLE_TIMEOUT_S:.0f} s — numbers will be contaminated (see "
+        "CLAUDE.md); run on an idle host"
     )
     if os.environ.get("BENCH_LOAD_STRICT", "0") == "1":
         raise RuntimeError(msg)
@@ -80,8 +95,11 @@ def main() -> None:
     n_batches = int(os.environ.get("BENCH_BATCHES", "4"))
     html_repeat = int(os.environ.get("BENCH_HTML_REPEAT", "0"))
 
+    # threshold in load-average units
+    load_limit = float(os.environ.get("BENCH_LOAD_MAX", "2.0"))
+    settle_wait_s = _settle(load_limit)
     load_before = _host_load()
-    _load_guard(load_before)
+    _load_guard(load_before, load_limit)
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as em
@@ -273,6 +291,7 @@ def main() -> None:
             "ingest_trials": max(1, cdc_trials),
             "query_trials": max(1, query_trials),
             "note": "per-entry best-of-N on a shared host (see CLAUDE.md)",
+            "settle_wait_s": round(settle_wait_s, 1),
             "load_before": load_before,
             "load_after": _host_load(),
         },

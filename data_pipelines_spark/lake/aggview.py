@@ -69,7 +69,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from data_pipelines_spark.functions.hashing import bucket_id
-from data_pipelines_spark.lake.table import ChangeLogUnavailableError, LakeTable
+from data_pipelines_spark.lake.table import (
+    ChangeLogUnavailableError,
+    LakeTable,
+    lake_writer,
+)
 
 _AGG_KINDS = ("sum", "avg", "min", "max", "recompute")
 
@@ -518,7 +522,7 @@ class AggView:
         delta = delta.withColumn("batch_id", F.lit(bid))
 
         (
-            delta.write.mode("overwrite")
+            lake_writer(delta).mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(self._deltas)
@@ -663,7 +667,7 @@ class AggView:
             ).withColumn("applied_v", F.lit(int(version)).cast("long"))
         folded = folded.withColumn("batch_id", F.lit(cid))
         (
-            folded.write.mode("overwrite")
+            lake_writer(folded).mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(self._deltas)
@@ -709,7 +713,7 @@ class AggView:
             .withColumn("batch_id", F.lit(cid))
         )
         (
-            folded.write.mode("overwrite")
+            lake_writer(folded).mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(self._deltas)

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_pipelines_spark.lake.table import lake_writer
 from data_pipelines_spark.operators.dedup import (
     bucket_pairs,
     bucketed_vector_pairs,
@@ -379,8 +380,8 @@ class _BatchStore:
         # distinct partition values — raise n_parts for bigger batches;
         # compaction keeps the same one-file-per-dir layout.
         (
-            df.repartition(*[F.col(p) for p in parts])
-            .write.mode("overwrite")
+            lake_writer(df.repartition(*[F.col(p) for p in parts]))
+            .mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*parts)
             .parquet(path)
@@ -445,10 +446,12 @@ class _BatchStore:
                 # the physical purge of retracted rows; cluster by the
                 # partition column so each consolidated dir is one file
                 # (same small-files rationale as _overwrite)
-                self._read_part(sub)
-                .select(*cols)
-                .repartition(F.col(part_col))
-                .write.mode("overwrite")
+                lake_writer(
+                    self._read_part(sub)
+                    .select(*cols)
+                    .repartition(F.col(part_col))
+                )
+                .mode("overwrite")
                 .partitionBy(part_col)
                 .parquet(os.path.join(tmp, sub))
             )

@@ -13,6 +13,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: The engine's SQL conf, applied by :func:`get_spark` and by
+#: ``scripts/run_ingest.py`` (whose master and resources come from
+#: spark-submit). The lake's file codec is not here: ``lake_writer`` in
+#: ``lake/table.py`` sets it on every lake write.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # int64 micros instead of legacy INT96: parquet footers then carry
+    # min/max statistics for timestamp columns, which the lake's per-file
+    # zone maps (read(min_seq_ts=...) file skipping) rely on. A session
+    # conf, not a writer option: Spark's parquet writer reads it from the
+    # session.
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+}
+
 
 def get_spark(
     app_name: str = "data_pipelines_spark",
@@ -35,26 +54,16 @@ def get_spark(
         except ValueError:
             shuffle_partitions = os.cpu_count() or 8
 
-    builder = (
+    spark = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        # for parquet written outside the lake
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # int64 micros instead of legacy INT96: parquet footers then carry
-        # min/max statistics for timestamp columns, which the lake's
-        # per-file zone maps (read(min_seq_ts=...) file skipping) rely on
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config(map={**ENGINE_CONF, **(extra_conf or {})})
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -161,28 +161,19 @@ class CdcPipeline:
         the carried hash (``operators.lww.lww_resolve_bumps``); compaction
         folds bumps back into plain rows.
 
-        The state side is a (key, content_hash) column-pruned read restricted
-        to the hash buckets the batch actually touches, so the state scan is
-        O(affected buckets), not O(table). Finding those buckets collects a
-        distinct over the batch: 2 Spark jobs per batch (traced perfbench
-        serve_and_follow: ``pipeline.change_filtered.jobs`` = 8 over 4
-        batches), and on batches large enough to touch every bucket it
-        prunes nothing.
+        The state side is the (key, content_hash) column-pruned read of every
+        bucket, so building the filter launches no Spark job. Reading buckets
+        the batch does not touch is correct because the join is by key;
+        routing to the touched buckets first would cost a distinct over the
+        batch (2 jobs) and prune only a batch with fewer distinct keys than
+        buckets.
         """
-        from data_pipelines_spark.functions.hashing import bucket_id, content_hash
+        from data_pipelines_spark.functions.hashing import content_hash
 
         snap_schema = self.table.schema()
         if snap_schema is None or "content_hash" not in [f.name for f in snap_schema.fields]:
             return batch
-        affected = [
-            r.b
-            for r in batch.select(
-                bucket_id(F.col(self.cfg.key), self.cfg.n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        state = self.table.read(columns=["content_hash"], buckets=affected).select(
+        state = self.table.read(columns=["content_hash"]).select(
             F.col(self.cfg.key), F.col("content_hash").alias("_stored_hash")
         )
         joined = batch.join(state, on=self.cfg.key, how="left")

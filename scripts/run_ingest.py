@@ -49,15 +49,9 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.appName("cdc-ingest")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .getOrCreate()
-    )
+    from data_pipelines_spark.session import ENGINE_CONF
+
+    spark = SparkSession.builder.appName("cdc-ingest").config(map=ENGINE_CONF).getOrCreate()
     # size shuffle/state partitions to the cluster, not Spark's default 200 —
     # with the stateful filter each trigger touches every state partition, so
     # 200 near-empty state stores would dominate small triggers.

@@ -8,8 +8,9 @@ every write path (merge deltas, compaction, overwrite) then come from those
 footers driver-side, so a rewrite's accounting launches no Spark job. These
 tests pin the policy, the zone maps against Spark's own min/max, the
 point-lookup file set and bucket routing, the per-call job budgets, the
-one snapshot format every commit path writes, and the per-commit summary
-the pipeline's throughput report is read from.
+lake's own file format (zstd at one level, whatever the session codec),
+the one snapshot format every commit path writes, and the per-commit
+summary the pipeline's throughput report is read from.
 """
 
 import datetime as dt
@@ -185,6 +186,55 @@ def test_metadata_only_job_budgets(spark, tmp_root):
     assert st["snapshots_expired"] > 0 and n == 0
 
 
+def test_merge_and_sync_job_budgets(spark, tmp_root):
+    """A delta merge onto an existing table is the dedup map stage plus the
+    decode-and-write stage: 2 Spark jobs. A Cascade.sync with nothing new
+    upstream reads metadata only: 0 jobs."""
+    changes = change_stream(spark, n_events=2000, n_keys=400, seed=11)
+    log = os.path.join(tmp_root, "log")
+    changes.write.parquet(log)
+    pipe = CdcPipeline(
+        spark,
+        PipelineConfig(table_root=os.path.join(tmp_root, "b"), n_buckets=4),
+    )
+    # built outside the counted call: reading a parquet source's schema is
+    # a job of its own
+    src = spark.read.parquet(log)
+    pipe.process_batch(src.where(F.col("offset") < 1000), 0)
+    second = src.where(F.col("offset") >= 1000)
+    st, n = _jobs(spark, "delta_merge", lambda: pipe.process_batch(second, 1))
+    assert st.committed_version is not None and st.rows_in > 0
+    assert n == 2
+
+    silver = LakeTable.create(spark, os.path.join(tmp_root, "s"), n_buckets=4)
+    cas = Cascade(pipe.table, silver)
+    cas.sync()
+    applied = silver.current_version()
+    out, n = _jobs(spark, "in_sync", cas.sync)
+    assert out == [] and silver.current_version() == applied
+    assert n == 0
+
+
+def test_change_filter_routes_with_zero_jobs(spark, tmp_root):
+    """Building the change filter launches no Spark job: the state side is
+    the column-pruned (key, content_hash) read of every bucket, joined by
+    key, with no distinct-bucket collect over the batch."""
+    changes = change_stream(spark, n_events=600, n_keys=120, seed=5)
+    pipe = CdcPipeline(
+        spark,
+        PipelineConfig(
+            table_root=os.path.join(tmp_root, "b"), n_buckets=4,
+            change_filter=True,
+        ),
+    )
+    first = changes.where(F.col("offset") < 300)
+    pipe.process_batch(first, 0)
+    filtered, n = _jobs(spark, "change_filter", lambda: pipe.change_filtered(first))
+    assert n == 0
+    # the re-delivered rows whose hash is stored come back as bumps
+    assert filtered.where(F.col("op") == "B").count() > 0
+
+
 @pytest.mark.parametrize("key_type", ["string", "long", "int"])
 def test_read_keys_routes_buckets_with_zero_jobs(spark, tmp_root, key_type):
     """read_keys hashes its keys into bucket ids while Spark plans (a local
@@ -275,6 +325,68 @@ def test_every_commit_path_writes_one_snapshot_format(spark, tmp_root):
             assert summary["files"] == 0 and summary["buckets"] == {}, v
         ops.add(snap["operation"])
     assert ops == KNOWN_OPERATIONS
+
+
+# ------------------------------------------------------ lake file format
+
+
+def _codecs(path: str) -> set[str]:
+    md = pq.ParquetFile(path).metadata
+    return {
+        md.row_group(rg).column(i).compression
+        for rg in range(md.num_row_groups)
+        for i in range(md.num_columns)
+    }
+
+
+def test_lake_writes_its_own_zstd_level_whatever_the_session_codec(
+    spark, tmp_root, monkeypatch
+):
+    """The lake owns its file format: under a snappy session every column
+    chunk of a table's data files and of an attached view's delta files is
+    zstd, and the merge's files are smaller than the same frame merged at
+    parquet-java's default zstd level 3."""
+    from data_pipelines_spark.lake import table as table_mod
+    from data_pipelines_spark.lake.aggview import AggView
+
+    changes = change_stream(spark, n_events=600, n_keys=120, seed=7)
+
+    def ingest(name):
+        pipe = CdcPipeline(
+            spark,
+            PipelineConfig(table_root=os.path.join(tmp_root, name), n_buckets=4),
+        )
+        view = AggView.create(
+            spark,
+            os.path.join(tmp_root, f"{name}_view"),
+            group_cols={"lang": "lang"},
+            measures={"chars": "length(text)"},
+            source_columns=["lang", "text"],
+        )
+        pipe.attach_view(view)
+        return pipe, pipe.process_batch(changes, 0)
+
+    codec_key = "spark.sql.parquet.compression.codec"
+    codec = spark.conf.get(codec_key)
+    spark.conf.set(codec_key, "snappy")
+    try:
+        pipe, st = ingest("lake")
+    finally:
+        spark.conf.set(codec_key, codec)
+    files = [os.path.join(pipe.table.root, fe["path"]) for fe in _entries(pipe.table)]
+    view_files = glob.glob(
+        os.path.join(tmp_root, "lake_view", "deltas", "**", "*.parquet"),
+        recursive=True,
+    )
+    assert files and view_files
+    for path in files + view_files:
+        assert _codecs(path) == {"ZSTD"}, path
+    assert st.bytes_written == sum(os.path.getsize(p) for p in files)
+
+    monkeypatch.setattr(table_mod, "ZSTD_LEVEL", 3)
+    _, st3 = ingest("level3")
+    assert st3.files_written == st.files_written
+    assert st.bytes_written < st3.bytes_written
 
 
 # ------------------------------------------------------ commit summaries
