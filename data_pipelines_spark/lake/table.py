@@ -80,7 +80,7 @@ from dataclasses import dataclass, field
 from datetime import datetime
 from hashlib import blake2b
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -90,20 +90,21 @@ _BUCKET_COL = "_bucket"
 DELETED_COL = "_deleted"
 BUMP_COL = "_bump"
 
-#: zstd level of every lake data file. On perfbench's lakes (local[4], seed
-#: 1) level 9 wrote 9.5% (serve_and_follow) and 10.4% (bulk_decode) fewer
-#: bytes than parquet-java's default 3; a rewrite of the serve lake came out
-#: 5.7% smaller at 6, 9.7% at 9 and 10.5% at 12, the last at 2.4x the
-#: rewrite time. The gain is in html and text (-19-20%); content_hash
-#: (SHA-256 hex, a third of lake bytes) does not compress at any level.
+#: zstd level of every lake data file. perfbench's lakes (seed 1,
+#: local[4]) against parquet-java's default level 3: serve_and_follow
+#: -5.5% at 6, -9.5% at 9, -10.3% at 12; bulk_decode -5.8%, -10.4%,
+#: -10.9%. A hot rewrite of either bronze took 1.2-1.6x level 3's wall
+#: at 9 and 6-9x at 12, for 0.5-1.6% fewer bytes than 9.
+#: The saving is in html and text; content_hash (SHA-256 hex, a third of
+#: the bytes) does not compress at any level.
 ZSTD_LEVEL = 9
 
 
-def lake_writer(df: DataFrame):
+def lake_writer(df: DataFrame) -> DataFrameWriter:
     """``df.write`` in the lake's file format: zstd at :data:`ZSTD_LEVEL`,
     whatever the session's parquet codec says. Every lake data file (table
     commits, view deltas, index stores) is written through it, so a table
-    written under another session has the same bytes."""
+    written under another session gets the same codec and level."""
     return (
         df.write.option("compression", "zstd")
         .option("parquet.compression.codec.zstd.level", str(ZSTD_LEVEL))
